@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import java.nio.file.{Files, Paths}
 
@@ -8,7 +8,10 @@ import java.nio.file.{Files, Paths}
   * one or more SparkEntry queries with the SAME session configuration and
   * noop-sink methodology as [[Bench]], prints per-run seconds plus a
   * per-job breakdown (job time, task count, task-time sum) of the final
-  * timed run, and writes `.explain("formatted")` to plans/<tag>/<q>.txt.
+  * timed run, the classes each run compiled (`CodegenMetrics`; a warm
+  * run that compiles points at a thrashing codegen cache or a constant
+  * inlined into generated code), and writes `.explain("formatted")` to
+  * plans/<tag>/<q>.txt.
   *
   * Usage: runMain graft.Probe <explainDirTag> <query> [query ...]
   * (env SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench; runs = 3.)
@@ -20,22 +23,11 @@ object Probe {
     require(names.nonEmpty, "usage: Probe <tag> <query> [query ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
-      .config("spark.sql.files.minPartitionNum", (cpus.toInt * 2).toString)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_PROBE_PF", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("GRAFT_PROBE_ADVISORY", "67108864"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Graft.session("graft-probe", s"local[$cpus]", cpus.toInt,
+      Map("spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
+            sys.env.getOrElse("GRAFT_PROBE_PF", "true"),
+          "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+            sys.env.getOrElse("GRAFT_PROBE_ADVISORY", "67108864")))
 
     // job-level breakdown listener
     case class J(desc: String, start: Long, var end: Long = 0L,
@@ -60,10 +52,14 @@ object Probe {
 
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
+      val compiles = scala.collection.mutable.ArrayBuffer.empty[Long]
       def run(): Double = {
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+        val s = (System.nanoTime() - t0) / 1e9
+        compiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+        s
       }
       // explain dump
       val dir = Paths.get(s"plans/$tag")
@@ -76,7 +72,8 @@ object Probe {
       jobs.clear(); record = true
       val r3 = run()
       record = false
-      println(f"QUERY $name%-28s warm=$warm%6.3f runs=[$r1%6.3f $r2%6.3f $r3%6.3f]")
+      println(f"QUERY $name%-28s warm=$warm%6.3f runs=[$r1%6.3f $r2%6.3f $r3%6.3f]" +
+        s" compiles=${compiles.mkString("[", " ", "]")}")
       jobs.toSeq.sortBy(_._1).foreach { case (id, j) =>
         val dur = (j.end - j.start) / 1000.0
         println(f"  job $id%4d ${dur}%7.3fs tasks=${j.tasks}%4d taskSum=${j.taskMs / 1000.0}%8.3fs  ${j.desc.take(80)}")

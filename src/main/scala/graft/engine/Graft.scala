@@ -22,17 +22,36 @@ object Graft {
     "supplier", "part", "orders", "lineitem", "events", "documents",
     "embeddings")
 
+  /** Entries of Spark's compiled-class cache (`CodeGenerator`), a static
+    * conf: JVM-wide, read once when `CodeGenerator` is first loaded. Spark's
+    * default of 100 is below the engine's working set, so repeated queries
+    * recompiled their generated classes on every run. Measured working set
+    * (distinct generated sources, counted with a cache that never evicts):
+    * the `curate` benchmark chain compiles 231 over its set-up, a
+    * 250-document warm-up batch and two 1200-document batches; the largest
+    * single query of the 253-query corpus compiles 108 (q_pipeline_v6) and
+    * the whole corpus 1642 (sf0.01). 2000 holds the corpus with headroom;
+    * README.md records the metaspace cost. */
+  val CodegenCacheEntries = 2000
+
+  /** The one session builder: engine extensions, AQE and the small-file
+    * settings below, then `overrides` (set last, so they win). Static confs
+    * (the codegen cache size among them) only take effect when this call
+    * creates the JVM's first session. */
   def session(appName: String = "graft", master: String = "local[32]",
-              shufflePartitions: Int = 32): SparkSession = {
+              shufflePartitions: Int = 32,
+              overrides: Map[String, String] = Map.empty): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
       // Engine planner rules (hash-companion rewrite, ANN routing,
-      // secondary-index access-path routing) — same registration a
-      // cluster deployment uses via --conf spark.sql.extensions.
+      // secondary-index access-path routing, literal parameterisation) —
+      // same registration a cluster deployment uses via --conf
+      // spark.sql.extensions.
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // Local fixtures are single small files; with the default 4 MiB
       // openCostInBytes Spark reads each as ONE split and every scan-heavy
       // stage runs single-threaded. Cheap open cost + a minPartitionNum of
@@ -47,8 +66,14 @@ object Graft {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(overrides)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // Load CodeGenerator now, while this session's conf is the active one,
+    // so its cache is built with the size set above whichever thread
+    // generates code first.
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+      .javaType(org.apache.spark.sql.types.IntegerType)
     spark
   }
 
@@ -85,8 +110,20 @@ object Graft {
   // recursive listing + footer schema inference spark.read repeats per
   // call, a miss reads fresh. Generation-managed dirs are additionally
   // safe by construction: a commit changes the RESOLVED dir path itself.
-  private val dirCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), (String, DataFrame)]
+  // Bounded LRU, so a hot dir keeps hitting while cold ones churn past
+  // the cap: entries hold a logical plan + InMemoryFileIndex each —
+  // small, but a long-lived session touching many store generations would
+  // accumulate them without limit. An evicted entry only costs one
+  // re-listing of its dir. Guarded by its own monitor.
+  private val DirCacheEntries = 512
+  private val dirCache = new java.util.LinkedHashMap[
+      (SparkSession, String, String), (String, DataFrame)](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[
+        (SparkSession, String, String), (String, DataFrame)]): Boolean =
+      size > DirCacheEntries
+  }
+
+  private[engine] def dirCacheSize: Int = dirCache.synchronized(dirCache.size)
 
   private def dirSignature(spark: SparkSession, path: String): String =
     try {
@@ -111,17 +148,11 @@ object Graft {
     val sig = dirSignature(spark, path)
     if (sig.isEmpty) return spark.read.format(format).load(path)
     val key = (spark, path, format)
-    dirCache.get(key) match {
+    dirCache.synchronized(Option(dirCache.get(key))) match {
       case Some((s, df)) if s == sig => df
       case _ =>
-        // bound the cache (r22, VERDICT r21 #6): entries hold a logical
-        // plan + InMemoryFileIndex each — small, but a long-lived session
-        // touching many store generations would accumulate them without
-        // limit. Eviction is a full clear past the cap: the cache is a
-        // metadata memo, so a clear only costs one re-listing per live dir.
-        if (dirCache.size >= 512) dirCache.clear()
         val df = spark.read.format(format).load(path)
-        dirCache(key) = (sig, df)
+        dirCache.synchronized(dirCache.put(key, (sig, df)))
         df
     }
   }
@@ -140,5 +171,5 @@ object Graft {
     // prefix match: one invalidate at an index's base path also drops its
     // generation subdirs and sidecar dirs (`<path>/gen-*`, `<path>_route`,
     // `<path>_layers`, …) — over-invalidation only ever costs a re-listing
-    dirCache.keys.filter(_._2.startsWith(path)).foreach(dirCache.remove)
+    dirCache.synchronized(dirCache.keySet.removeIf(_._2.startsWith(path)))
 }

@@ -118,6 +118,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // plans the graph family's routed-candidate leaf (AnnRoutingRule's
     // rewrite target for clustered graph indexes)
     ext.injectPlannerStrategy(_ => new GraphCandidatesStrategy)
+    // constants of filters and projections out of the generated Java
+    // source, so a query shape's compiled class serves every run of it
+    ext.injectColumnar(_ => new org.apache.spark.sql.execution.ColumnarRule {
+      override def preColumnarTransitions = ParameterizeLiterals
+    })
     // Only the genuine catalyst Expressions register as SQL functions; the
     // text-analysis ops are Column COMPOSITIONS of SQL built-ins, so
     // spark.sql users already have their vocabulary (the oracle replays

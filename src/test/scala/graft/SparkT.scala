@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test run.
+/** One shared local session for the whole test run, built by the engine's
+  * own [[graft.engine.Graft.session]] so specs run with its settings (the
+  * codegen cache size among them).
   *
   * `spark.sql.codegen.fallback=false` makes Janino/codegen defects in custom
   * Expressions hard failures in tests instead of silent interpreted-eval
@@ -10,16 +12,8 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkT {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.engine.Graft.session("graft-test", "local[4]", 4,
+      Map("spark.sql.codegen.fallback" -> "false"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -76,4 +76,28 @@ class GraftCacheSpec extends AnyFunSuite {
     assert(Graft.cachedRead(SparkT.spark, base)
       .select("v").as[Long].collect().toSeq === Seq(1L))
   }
+
+  test("dirCache evicts least-recently-used: a hot dir still hits past 512 cold ones") {
+    val root = Files.createTempDirectory("graft-lru")
+    val seed = root.resolve("seed")
+    Seq((1L, 1L)).toDF("k", "v").coalesce(1).write.parquet(seed.toString)
+    def dir(name: String): String = {
+      val d = Files.createDirectory(root.resolve(name))
+      Files.copy(onlyParquet(seed), d.resolve("part-0.parquet"))
+      d.toString
+    }
+    val hot = dir("hot")
+    val cold = (0 until 560).map(i => dir(s"cold$i"))
+    val hotDf = Graft.cachedRead(SparkT.spark, hot)
+    val firstCold = Graft.cachedRead(SparkT.spark, cold.head)
+    cold.zipWithIndex.foreach { case (c, i) =>
+      Graft.cachedRead(SparkT.spark, c)
+      if (i % 100 == 99)
+        assert(Graft.cachedRead(SparkT.spark, hot) eq hotDf, s"hot dir missed after $i")
+    }
+    assert(Graft.cachedRead(SparkT.spark, hot) eq hotDf)
+    assert(Graft.dirCacheSize <= 512)
+    // the coldest entry is the one evicted
+    assert(Graft.cachedRead(SparkT.spark, cold.head) ne firstCold)
+  }
 }
