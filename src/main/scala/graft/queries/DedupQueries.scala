@@ -191,8 +191,7 @@ object DedupQueries {
         val docs = t(s, d, "documents")
         val corpus = docs.filter(pmod(col("doc_id"), lit(5L)) =!= 0L)
         val batch = docs.filter(pmod(col("doc_id"), lit(5L)) === 0L)
-        val store = s"${graft.tables.Derived.root}/" +
-          s"${new java.io.File(d).getName}/sigstore_documents"
+        val store = graft.tables.Derived.path(d, "sigstore_documents")
         if (!new java.io.File(store, "_SUCCESS").isFile)
           Dedup.writeSignatureStore(corpus, "doc_id", "text", store)
         Dedup.nearDupsAgainstStore(corpus, batch, store, "doc_id", "text",
@@ -275,8 +274,7 @@ object DedupQueries {
         val docs = t(s, d, "documents")
         val corpus = docs.filter(pmod(col("doc_id"), lit(5L)) =!= 0L)
         val batch = docs.filter(pmod(col("doc_id"), lit(5L)) === 0L)
-        val store = s"${graft.tables.Derived.root}/" +
-          s"${new java.io.File(d).getName}/gramstore_documents"
+        val store = graft.tables.Derived.path(d, "gramstore_documents")
         if (!new java.io.File(store, "_SUCCESS").isFile)
           Dedup.writeGramStore(corpus, "doc_id", "text", store, n = 4)
         Dedup.spanCoverageAgainstStore(batch, store, "doc_id", "text",

@@ -1229,8 +1229,7 @@ object PipelineQueries {
           .localCheckpoint(true)
         val corpus = stripped.filter(pmod(col("doc_id"), lit(5L)) =!= 0L)
         val batch = stripped.filter(pmod(col("doc_id"), lit(5L)) === 0L)
-        val store = s"${graft.tables.Derived.root}/" +
-          s"${new java.io.File(d).getName}/lmstore_v6_documents"
+        val store = graft.tables.Derived.path(d, "lmstore_v6_documents")
         if (!new java.io.File(store, "_SUCCESS").isFile)
           NgramLM.writeLM(corpus, "clean_text", store, 3)
         val scored = NgramLM.scoreAgainstStore(batch, store,
@@ -1936,7 +1935,7 @@ object PipelineQueries {
   private def semIndex(s: org.apache.spark.sql.SparkSession, d: String): String =
     semIdxCache.getOrElseUpdate(d, {
       val semPath = graft.tables.Derived.tablePath(s, d, "documents_sem")
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswc_documents_sem"
+      val path = graft.tables.Derived.path(d, "hnswc_documents_sem")
       if (!new java.io.File(graft.vector.Hnsw.routePath(path), "_SUCCESS").isFile)
         graft.vector.Hnsw.buildIndexClustered(graft.engine.Graft.cachedRead(s, semPath),
           "emb", "doc_id", path,
@@ -1967,7 +1966,7 @@ object PipelineQueries {
   private def v7Index(s: org.apache.spark.sql.SparkSession, d: String): String =
     semIdxCache.getOrElseUpdate(d + "#v7", {
       val semPath = graft.tables.Derived.tablePath(s, d, "documents_sem")
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswc_documents_sem_corpus"
+      val path = graft.tables.Derived.path(d, "hnswc_documents_sem_corpus")
       val p = graft.vector.Hnsw.Params(m = 8, efC = 64, partitions = 8)
       if (!new java.io.File(graft.vector.Hnsw.layersPath(path), "_SUCCESS").isFile) {
         graft.vector.Hnsw.buildIndexClustered(

@@ -342,8 +342,7 @@ object TextQueries {
         val docs = t(s, d, "documents")
         val corpus = docs.filter(pmod(col("doc_id"), lit(5L)) =!= 0L)
         val batch = docs.filter(pmod(col("doc_id"), lit(5L)) === 0L)
-        val store = s"${graft.tables.Derived.root}/" +
-          s"${new java.io.File(d).getName}/lmstore_documents"
+        val store = graft.tables.Derived.path(d, "lmstore_documents")
         if (!new java.io.File(store, "_SUCCESS").isFile)
           graft.pipeline.NgramLM.writeLM(corpus, "text", store, 3)
         graft.pipeline.NgramLM.scoreAgainstStore(batch, store,

@@ -46,6 +46,40 @@ object VectorQueries {
       .select(col("vec_id"), round(col("dist"), 6).as("dist"))
   }
 
+  /** The routed flat-codec gate: the codec table registers as its own
+    * base, and a PLAIN top-10 in the codec's metric over it (optionally
+    * filtered) is rewritten into the coarse screen ⋈ self under the
+    * untouched Sort/Limit, which IS the exact rescore. */
+  private def routedCodec(s: SparkSession, d: String,
+                          index: (Quantize.Codec, String), codeCol: String,
+                          refine: Int = 0,
+                          filter: Option[org.apache.spark.sql.Column] = None)
+      : DataFrame = {
+    val (c, path) = index
+    graft.plans.AnnRouting.registerQuant(s, path, path, c,
+      vecCol = "embedding", idCol = "vec_id", codeCol = codeCol,
+      refine = refine)
+    val base = graft.engine.Graft.cachedRead(s, path)
+    Knn.knn(filter.map(base.filter).getOrElse(base), "embedding", "vec_id",
+        queryVec(s, d), 10, c.metric)
+      .select(col("vec_id"), round(col("dist"), 6).as("dist"))
+  }
+
+  /** The screened batch-join gate: vec_id < 20 query the rest of the
+    * codec table, k = 3 (the windowed cross-join oracles' split). */
+  private def codecJoin(s: SparkSession, index: (Quantize.Codec, String),
+                        codeCol: String, refine: Int): DataFrame = {
+    val (c, path) = index
+    Quantize.knnJoin(
+      graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
+      "embedding", codeCol, "vec_id", c,
+      graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
+        .select(col("vec_id").as("query_id"), col("embedding")),
+      "query_id", "embedding", "corpus_id", k = 3, refine = refine)
+      .select(col("query_id"), col("corpus_id"),
+        round(col("dist"), 6).as("dist"), col("rn").cast("long").as("rn"))
+  }
+
   private val qSub = "(SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = 0)"
 
   private def oracleFor(metricExpr: String, where: String = ""): String =
@@ -189,17 +223,7 @@ object VectorQueries {
     // coarse set on this corpus, so the gate shares the windowed
     // cross-join oracle with the other join legs.
     "q_knn_join_quant" -> QueryDef(
-      (s, d) => {
-        val (m, path) = quantIndex(s, d)
-        Quantize.knnJoinQuant(
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
-          "embedding", "qvec", "vec_id", m,
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
-            .select(col("vec_id").as("query_id"), col("embedding")),
-          "query_id", "embedding", "corpus_id", k = 3, refine = 32)
-          .select(col("query_id"), col("corpus_id"),
-            round(col("dist"), 6).as("dist"), col("rn").cast("long").as("rn"))
-      },
+      (s, d) => codecJoin(s, quantIndex(s, d), "qvec", refine = 32),
       Some("WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] qv " +
         "FROM embeddings WHERE vec_id < 20), " +
         "c AS (SELECT vec_id AS corpus_id, embedding::DOUBLE[] cv " +
@@ -217,17 +241,7 @@ object VectorQueries {
     // packed-nibble screen, 8× smaller scan bytes; shares the windowed
     // cross-join oracle under the k·refine coarse-cut contract.
     "q_knn_join_quant4" -> QueryDef(
-      (s, d) => {
-        val (m, path) = quant4Index(s, d)
-        Quantize.knnJoinQuant4(
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
-          "embedding", "q4vec", "vec_id", m,
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
-            .select(col("vec_id").as("query_id"), col("embedding")),
-          "query_id", "embedding", "corpus_id", k = 3, refine = 32)
-          .select(col("query_id"), col("corpus_id"),
-            round(col("dist"), 6).as("dist"), col("rn").cast("long").as("rn"))
-      },
+      (s, d) => codecJoin(s, quant4Index(s, d), "q4vec", refine = 32),
       Some(knnJoinOracle)),
 
     // Batch knn join over the BINARY table: XOR+popcount Hamming screen
@@ -237,17 +251,7 @@ object VectorQueries {
     // query points at sf0.1 sits between 576 and 960 candidates, so
     // refine=320 keeps the gate equal to the exact oracle at both scales.
     "q_knn_join_binary" -> QueryDef(
-      (s, d) => {
-        val (m, path) = binIndex(s, d)
-        Quantize.knnJoinBinary(
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
-          "embedding", "bvec", "vec_id", m,
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
-            .select(col("vec_id").as("query_id"), col("embedding")),
-          "query_id", "embedding", "corpus_id", k = 3, refine = 320)
-          .select(col("query_id"), col("corpus_id"),
-            round(col("dist"), 6).as("dist"), col("rn").cast("long").as("rn"))
-      },
+      (s, d) => codecJoin(s, binIndex(s, d), "bvec", refine = 320),
       Some(knnJoinOracle)),
 
     // Batch knn join over the PQ table: one M×K ADC table per (query,
@@ -258,17 +262,7 @@ object VectorQueries {
     // threshold on this corpus; the gate shares the windowed cross-join
     // oracle.
     "q_knn_join_pq" -> QueryDef(
-      (s, d) => {
-        val (m, path) = pqIndex(s, d)
-        Quantize.knnJoinPq(
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
-          "embedding", "pqvec", "vec_id", m,
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
-            .select(col("vec_id").as("query_id"), col("embedding")),
-          "query_id", "embedding", "corpus_id", k = 3, refine = 128)
-          .select(col("query_id"), col("corpus_id"),
-            round(col("dist"), 6).as("dist"), col("rn").cast("long").as("rn"))
-      },
+      (s, d) => codecJoin(s, pqIndex(s, d), "pqvec", refine = 128),
       Some("WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] qv " +
         "FROM embeddings WHERE vec_id < 20), " +
         "c AS (SELECT vec_id AS corpus_id, embedding::DOUBLE[] cv " +
@@ -353,36 +347,14 @@ object VectorQueries {
     // (192 candidates) verified equal to the exact cross join at
     // sf0.01, sf0.1, and the 10x corpus.
     "q_knn_join_quant_ip" -> QueryDef(
-      (s, d) => {
-        val (m, path) = quantIpIndex(s, d)
-        Quantize.knnJoinQuant(
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
-          "embedding", "qvec", "vec_id", m,
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
-            .select(col("vec_id").as("query_id"), col("embedding")),
-          "query_id", "embedding", "corpus_id", k = 3, metric = Knn.IP,
-          refine = 64)
-          .select(col("query_id"), col("corpus_id"),
-            round(col("dist"), 6).as("dist"), col("rn").cast("long").as("rn"))
-      },
+      (s, d) => codecJoin(s, quantIpIndex(s, d), "qvec", refine = 64),
       Some(knnJoinOracleIp)),
 
     // Batch knn join over the FLAT int8 table under COSINE (r20): codes
     // of the unit-normalized companion (normalized-L2 order == cosine
     // order), exact cosine rescore on raw floats.
     "q_knn_join_quant_cos" -> QueryDef(
-      (s, d) => {
-        val (m, path) = quantCosIndex(s, d)
-        Quantize.knnJoinQuant(
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
-          "embedding", "qvec", "vec_id", m,
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
-            .select(col("vec_id").as("query_id"), col("embedding")),
-          "query_id", "embedding", "corpus_id", k = 3, metric = Knn.Cosine,
-          refine = 64)
-          .select(col("query_id"), col("corpus_id"),
-            round(col("dist"), 6).as("dist"), col("rn").cast("long").as("rn"))
-      },
+      (s, d) => codecJoin(s, quantCosIndex(s, d), "qvec", refine = 64),
       Some(knnJoinOracleCos)),
 
     // Exact batch joins under IP and cosine (r20 — the exact-fullscan
@@ -431,96 +403,30 @@ object VectorQueries {
     // and the 10x corpus (the augmented-space screens' coarse ranks sit
     // deeper than L2's — the q_knn_ivf_pq_ip rationale).
     "q_knn_join_quant4_ip" -> QueryDef(
-      (s, d) => {
-        val (m, path) = quant4IpIndex(s, d)
-        Quantize.knnJoinQuant4(
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
-          "embedding", "q4vec", "vec_id", m,
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
-            .select(col("vec_id").as("query_id"), col("embedding")),
-          "query_id", "embedding", "corpus_id", k = 3, metric = Knn.IP,
-          refine = 96)
-          .select(col("query_id"), col("corpus_id"),
-            round(col("dist"), 6).as("dist"), col("rn").cast("long").as("rn"))
-      },
+      (s, d) => codecJoin(s, quant4IpIndex(s, d), "q4vec", refine = 96),
       Some(knnJoinOracleIp)),
 
     "q_knn_join_quant4_cos" -> QueryDef(
-      (s, d) => {
-        val (m, path) = quant4CosIndex(s, d)
-        Quantize.knnJoinQuant4(
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
-          "embedding", "q4vec", "vec_id", m,
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
-            .select(col("vec_id").as("query_id"), col("embedding")),
-          "query_id", "embedding", "corpus_id", k = 3, metric = Knn.Cosine,
-          refine = 96)
-          .select(col("query_id"), col("corpus_id"),
-            round(col("dist"), 6).as("dist"), col("rn").cast("long").as("rn"))
-      },
+      (s, d) => codecJoin(s, quant4CosIndex(s, d), "q4vec", refine = 96),
       Some(knnJoinOracleCos)),
 
     "q_knn_join_pq_ip" -> QueryDef(
-      (s, d) => {
-        val (m, path) = pqIpIndex(s, d)
-        Quantize.knnJoinPq(
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
-          "embedding", "pqvec", "vec_id", m,
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
-            .select(col("vec_id").as("query_id"), col("embedding")),
-          "query_id", "embedding", "corpus_id", k = 3, metric = Knn.IP,
-          refine = 512)
-          .select(col("query_id"), col("corpus_id"),
-            round(col("dist"), 6).as("dist"), col("rn").cast("long").as("rn"))
-      },
+      (s, d) => codecJoin(s, pqIpIndex(s, d), "pqvec", refine = 512),
       Some(knnJoinOracleIp)),
 
     "q_knn_join_pq_cos" -> QueryDef(
-      (s, d) => {
-        val (m, path) = pqCosIndex(s, d)
-        Quantize.knnJoinPq(
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
-          "embedding", "pqvec", "vec_id", m,
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
-            .select(col("vec_id").as("query_id"), col("embedding")),
-          "query_id", "embedding", "corpus_id", k = 3, metric = Knn.Cosine,
-          refine = 512)
-          .select(col("query_id"), col("corpus_id"),
-            round(col("dist"), 6).as("dist"), col("rn").cast("long").as("rn"))
-      },
+      (s, d) => codecJoin(s, pqCosIndex(s, d), "pqvec", refine = 512),
       Some(knnJoinOracleCos)),
 
     // residual-corrected binary screens (the magnitude-aware estimate —
     // several-fold tighter than raw Hamming, so the refine matches the
     // plain binary join's despite the coarser bit screen)
     "q_knn_join_binary_ip" -> QueryDef(
-      (s, d) => {
-        val (m, path) = binResIpIndex(s, d)
-        Quantize.knnJoinBinary(
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
-          "embedding", "bvec", "vec_id", m,
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
-            .select(col("vec_id").as("query_id"), col("embedding")),
-          "query_id", "embedding", "corpus_id", k = 3, metric = Knn.IP,
-          refine = 320, rCol = Some("bres"))
-          .select(col("query_id"), col("corpus_id"),
-            round(col("dist"), 6).as("dist"), col("rn").cast("long").as("rn"))
-      },
+      (s, d) => codecJoin(s, binResIpIndex(s, d), "bvec", refine = 320),
       Some(knnJoinOracleIp)),
 
     "q_knn_join_binary_cos" -> QueryDef(
-      (s, d) => {
-        val (m, path) = binResCosIndex(s, d)
-        Quantize.knnJoinBinary(
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
-          "embedding", "bvec", "vec_id", m,
-          graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
-            .select(col("vec_id").as("query_id"), col("embedding")),
-          "query_id", "embedding", "corpus_id", k = 3, metric = Knn.Cosine,
-          refine = 320, rCol = Some("bres"))
-          .select(col("query_id"), col("corpus_id"),
-            round(col("dist"), 6).as("dist"), col("rn").cast("long").as("rn"))
-      },
+      (s, d) => codecJoin(s, binResCosIndex(s, d), "bvec", refine = 320),
       Some(knnJoinOracleCos)),
 
     // quantized-graph joins: one CODE-graph rehydration per sub-graph
@@ -664,14 +570,8 @@ object VectorQueries {
     // coarse set on these fixtures (same int8-error argument as
     // q_knn_quant), so the result equals the exact filtered fullscan.
     "q_knn_filtered_quant" -> QueryDef(
-      (s, d) => {
-        val (m, path) = quantIndex(s, d)
-        graft.plans.AnnRouting.registerQuant(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id")
-        Knn.knn(graft.engine.Graft.cachedRead(s, path).filter(col("label") === 3),
-            "embedding", "vec_id", queryVec(s, d), 10, Knn.L2)
-          .select(col("vec_id"), round(col("dist"), 6).as("dist"))
-      },
+      (s, d) => routedCodec(s, d, quantIndex(s, d), "qvec",
+        filter = Some(col("label") === 3)),
       Some(oracleFor(s"list_distance(embedding::DOUBLE[], $qSub)",
         "WHERE label = 3 "))),
 
@@ -1061,7 +961,7 @@ object VectorQueries {
     "q_knn_pq" -> QueryDef(
       (s, d) => {
         val (m, path) = pqIndex(s, d)
-        Quantize.searchRescorePq(graft.engine.Graft.cachedRead(s, path), "embedding", "pqvec",
+        Quantize.searchRescore(graft.engine.Graft.cachedRead(s, path), "embedding", "pqvec",
             "vec_id", m, queryVec(s, d), k = 10, refine = 32)
           .select(col("vec_id"), round(col("dist"), 6).as("dist"))
       },
@@ -1285,14 +1185,7 @@ object VectorQueries {
     // fullscan — shared oracle. Family selection + mutation-epoch guard
     // pinned in AnnRoutingSpec.
     "q_knn_pq_auto" -> QueryDef(
-      (s, d) => {
-        val (m, path) = pqIndex(s, d)
-        graft.plans.AnnRouting.registerPq(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id")
-        Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
-            queryVec(s, d), 10, Knn.L2)
-          .select(col("vec_id"), round(col("dist"), 6).as("dist"))
-      },
+      (s, d) => routedCodec(s, d, pqIndex(s, d), "pqvec"),
       Some(oracleFor(s"list_distance(embedding::DOUBLE[], $qSub)"))),
 
     // K3 over the routed PQ family: the attribute filter rides INSIDE the
@@ -1300,14 +1193,8 @@ object VectorQueries {
     // the k·refine contract applies to the FILTERED corpus — a margin
     // that only widens as the filter narrows the field.
     "q_knn_pq_auto_filtered" -> QueryDef(
-      (s, d) => {
-        val (m, path) = pqIndex(s, d)
-        graft.plans.AnnRouting.registerPq(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id")
-        Knn.knn(graft.engine.Graft.cachedRead(s, path).filter(col("label") === 3),
-            "embedding", "vec_id", queryVec(s, d), 10, Knn.L2)
-          .select(col("vec_id"), round(col("dist"), 6).as("dist"))
-      },
+      (s, d) => routedCodec(s, d, pqIndex(s, d), "pqvec",
+        filter = Some(col("label") === 3)),
       Some(oracleFor(s"list_distance(embedding::DOUBLE[], $qSub)",
         "WHERE label = 3 "))),
 
@@ -1318,7 +1205,7 @@ object VectorQueries {
     "q_knn_pq_seg" -> QueryDef(
       (s, d) => {
         val (m, path) = pqSegIndex(s, d)
-        Quantize.searchRescorePq(graft.engine.Graft.cachedRead(s, path), "embedding", "pqvec",
+        Quantize.searchRescore(graft.engine.Graft.cachedRead(s, path), "embedding", "pqvec",
             "vec_id", m, queryVec(s, d), k = 10, refine = 32)
           .select(col("vec_id"), round(col("dist"), 6).as("dist"))
       },
@@ -1334,35 +1221,21 @@ object VectorQueries {
     // result equals the exact fullscan — shared oracle. Family selection
     // pinned in AnnRoutingSpec.
     "q_knn_quant_auto" -> QueryDef(
-      (s, d) => {
-        val (m, path) = quantIndex(s, d)
-        graft.plans.AnnRouting.registerQuant(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id")
-        Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
-            queryVec(s, d), 10, Knn.L2)
-          .select(col("vec_id"), round(col("dist"), 6).as("dist"))
-      },
+      (s, d) => routedCodec(s, d, quantIndex(s, d), "qvec"),
       Some(oracleFor(s"list_distance(embedding::DOUBLE[], $qSub)"))),
 
     // K6+K4 4-bit quantization (the reference's third variant, knn/
     // quantizer.cpp 4-bit transposed rep), AUTOMATICALLY ROUTED (r10
     // VERDICT #3 — the reference serves whatever index type the column
     // has, knn/knn.cpp:600-610): 2 dims/byte packed-nibble codes, 8x
-    // smaller scans; the registered Quant4Family splices the coarse
+    // smaller scans; the registered 4-bit codec splices the coarse
     // nibble screen under the plain top-k's untouched Sort/Limit (the
     // exact rescore). Deterministic end to end; measured worst-case
     // true-top-10 coarse rank on these fixtures is 14 (sf0.01) /
     // 13 (sf0.1), so refine=12 (120 survivors) keeps the routed result
     // equal to the exact fullscan — shared oracle.
     "q_knn_quant4" -> QueryDef(
-      (s, d) => {
-        val (m, path) = quant4Index(s, d)
-        graft.plans.AnnRouting.registerQuant4(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id")
-        Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
-            queryVec(s, d), 10, Knn.L2)
-          .select(col("vec_id"), round(col("dist"), 6).as("dist"))
-      },
+      (s, d) => routedCodec(s, d, quant4Index(s, d), "q4vec"),
       Some(oracleFor(s"list_distance(embedding::DOUBLE[], $qSub)"))),
 
     // K6+K4 binary (1-bit) quantization, AUTOMATICALLY ROUTED (completes
@@ -1375,14 +1248,7 @@ object VectorQueries {
     // BQ's worst case), so the routed result equals the exact fullscan —
     // shared oracle.
     "q_knn_binary" -> QueryDef(
-      (s, d) => {
-        val (m, path) = binIndex(s, d)
-        graft.plans.AnnRouting.registerBinary(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", refine = 40)
-        Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
-            queryVec(s, d), 10, Knn.L2)
-          .select(col("vec_id"), round(col("dist"), 6).as("dist"))
-      },
+      (s, d) => routedCodec(s, d, binIndex(s, d), "bvec", refine = 40),
       Some(oracleFor(s"list_distance(embedding::DOUBLE[], $qSub)"))),
 
     // K6 residual-factor binary quantization (r13 VERDICT #8 — the
@@ -1394,17 +1260,7 @@ object VectorQueries {
     // multiple (QuantizeSpec pins the economics; this gate pins the
     // end-to-end exactness vs the fullscan oracle).
     "q_knn_binary_res" -> QueryDef(
-      (s, d) => {
-        val (m, path) = binResIndex(s, d)
-        // AUTOMATIC route (K4): plain top-k over the registered table
-        // rewrites through the residual-corrected screen + exact rescore
-        graft.plans.AnnRouting.registerBinary(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", refine = 40,
-          rCol = Some("bres"))
-        Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
-            queryVec(s, d), 10, Knn.L2)
-          .select(col("vec_id"), round(col("dist"), 6).as("dist"))
-      },
+      (s, d) => routedCodec(s, d, binResIndex(s, d), "bvec", refine = 40),
       Some(oracleFor(s"list_distance(embedding::DOUBLE[], $qSub)"))),
 
     // K6 COSINE on the flat int8 family (r18, VERDICT r17 #2 — the
@@ -1417,15 +1273,7 @@ object VectorQueries {
     // trained metric dispatches the `1 - cosine_sim` sort key through
     // the coarse screen splice — shares the cosine fullscan oracle.
     "q_knn_quant_cos" -> QueryDef(
-      (s, d) => {
-        val (m, path) = quantCosIndex(s, d)
-        graft.plans.AnnRouting.registerQuant(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", qCol = "qvec",
-          refine = 16)
-        Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
-            queryVec(s, d), 10, Knn.Cosine)
-          .select(col("vec_id"), round(col("dist"), 6).as("dist"))
-      },
+      (s, d) => routedCodec(s, d, quantCosIndex(s, d), "qvec", refine = 16),
       Some(oracleFor(s"1.0 - $cosSim"))),
 
     // K6 INNER-PRODUCT on the flat int8 family (r18 — completing the
@@ -1437,15 +1285,7 @@ object VectorQueries {
     // 1−dot rescore on raw floats. AUTOMATICALLY ROUTED on the
     // `1 - ip_score` sort key — shares the IP fullscan oracle.
     "q_knn_quant_ip" -> QueryDef(
-      (s, d) => {
-        val (m, path) = quantIpIndex(s, d)
-        graft.plans.AnnRouting.registerQuant(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", qCol = "qvec",
-          refine = 16)
-        Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
-            queryVec(s, d), 10, Knn.IP)
-          .select(col("vec_id"), round(col("dist"), 6).as("dist"))
-      },
+      (s, d) => routedCodec(s, d, quantIpIndex(s, d), "qvec", refine = 16),
       Some(oracleFor(
         s"1.0 - list_inner_product(embedding::DOUBLE[], $qSub)"))),
 
@@ -1454,15 +1294,7 @@ object VectorQueries {
     // rescore — all four flat families now serve cosine, matching the
     // reference's any-metric quantizer (knn/quantizer.cpp:45-700).
     "q_knn_quant4_cos" -> QueryDef(
-      (s, d) => {
-        val (m, path) = quant4CosIndex(s, d)
-        graft.plans.AnnRouting.registerQuant4(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", qCol = "q4vec",
-          refine = 24)
-        Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
-            queryVec(s, d), 10, Knn.Cosine)
-          .select(col("vec_id"), round(col("dist"), 6).as("dist"))
-      },
+      (s, d) => routedCodec(s, d, quant4CosIndex(s, d), "q4vec", refine = 24),
       Some(oracleFor(s"1.0 - $cosSim"))),
 
     // K6 COSINE on the flat-PQ family (r18): codebooks trained on the
@@ -1470,15 +1302,7 @@ object VectorQueries {
     // from the normalized query — ADC order tracks cosine order, exact
     // cosine rescore of the k·refine survivors.
     "q_knn_pq_cos" -> QueryDef(
-      (s, d) => {
-        val (m, path) = pqCosIndex(s, d)
-        graft.plans.AnnRouting.registerPq(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", qCol = "pqvec",
-          refine = 48)
-        Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
-            queryVec(s, d), 10, Knn.Cosine)
-          .select(col("vec_id"), round(col("dist"), 6).as("dist"))
-      },
+      (s, d) => routedCodec(s, d, pqCosIndex(s, d), "pqvec", refine = 48),
       Some(oracleFor(s"1.0 - $cosSim"))),
 
     // K6 COSINE on the residual-corrected binary family (r18): sign bits
@@ -1486,15 +1310,7 @@ object VectorQueries {
     // magnitude-aware L2² estimate orders as cosine; the routed plan's
     // untouched Sort/Limit is the exact cosine rescore on raw floats.
     "q_knn_binary_res_cos" -> QueryDef(
-      (s, d) => {
-        val (m, path) = binResCosIndex(s, d)
-        graft.plans.AnnRouting.registerBinary(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", bCol = "bvec",
-          refine = 40, rCol = Some("bres"))
-        Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
-            queryVec(s, d), 10, Knn.Cosine)
-          .select(col("vec_id"), round(col("dist"), 6).as("dist"))
-      },
+      (s, d) => routedCodec(s, d, binResCosIndex(s, d), "bvec", refine = 40),
       Some(oracleFor(s"1.0 - $cosSim"))),
 
     // K6 INNER PRODUCT on the 4-bit family (r19 — IP's routed gate
@@ -1502,15 +1318,7 @@ object VectorQueries {
     // MIPS→L2 augmented companion, routed on the `1 - ip_score` sort key,
     // exact 1−dot rescore. Shares the IP fullscan oracle.
     "q_knn_quant4_ip" -> QueryDef(
-      (s, d) => {
-        val (m, path) = quant4IpIndex(s, d)
-        graft.plans.AnnRouting.registerQuant4(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", qCol = "q4vec",
-          refine = 24)
-        Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
-            queryVec(s, d), 10, Knn.IP)
-          .select(col("vec_id"), round(col("dist"), 6).as("dist"))
-      },
+      (s, d) => routedCodec(s, d, quant4IpIndex(s, d), "q4vec", refine = 24),
       Some(oracleFor(
         s"1.0 - list_inner_product(embedding::DOUBLE[], $qSub)"))),
 
@@ -1521,15 +1329,7 @@ object VectorQueries {
     // coordinate absorbs the norm spread, so coarse ranks of the true
     // top-10 sit deeper than the L2 family's.
     "q_knn_pq_ip" -> QueryDef(
-      (s, d) => {
-        val (m, path) = pqIpIndex(s, d)
-        graft.plans.AnnRouting.registerPq(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", qCol = "pqvec",
-          refine = 128)
-        Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
-            queryVec(s, d), 10, Knn.IP)
-          .select(col("vec_id"), round(col("dist"), 6).as("dist"))
-      },
+      (s, d) => routedCodec(s, d, pqIpIndex(s, d), "pqvec", refine = 128),
       Some(oracleFor(
         s"1.0 - list_inner_product(embedding::DOUBLE[], $qSub)"))),
 
@@ -1537,15 +1337,7 @@ object VectorQueries {
     // magnitude factors of the augmented companion, corrected-Hamming
     // screen in the augmented space, exact 1−dot rescore.
     "q_knn_binary_res_ip" -> QueryDef(
-      (s, d) => {
-        val (m, path) = binResIpIndex(s, d)
-        graft.plans.AnnRouting.registerBinary(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", bCol = "bvec",
-          refine = 40, rCol = Some("bres"))
-        Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
-            queryVec(s, d), 10, Knn.IP)
-          .select(col("vec_id"), round(col("dist"), 6).as("dist"))
-      },
+      (s, d) => routedCodec(s, d, binResIpIndex(s, d), "bvec", refine = 40),
       Some(oracleFor(
         s"1.0 - list_inner_product(embedding::DOUBLE[], $qSub)"))),
 
@@ -1645,14 +1437,7 @@ object VectorQueries {
     // inside the coarse set, making the routed result equal to the exact
     // fullscan — shared oracle.
     "q_knn_quant_seg" -> QueryDef(
-      (s, d) => {
-        val (m, path) = quantSegIndex(s, d)
-        graft.plans.AnnRouting.registerQuant(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", refine = 16)
-        Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
-            queryVec(s, d), 10, Knn.L2)
-          .select(col("vec_id"), round(col("dist"), 6).as("dist"))
-      },
+      (s, d) => routedCodec(s, d, quantSegIndex(s, d), "qvec", refine = 16),
       Some(oracleFor(s"list_distance(embedding::DOUBLE[], $qSub)"))),
 
     // I9 OPTIMIZE gate, GRAPH family — the full reference lifecycle
@@ -1728,14 +1513,7 @@ object VectorQueries {
     // refine=8 (the appended-state gate needed 16) and the coarse screen
     // + exact rescore equals the fullscan oracle.
     "q_knn_quant_compact" -> QueryDef(
-      (s, d) => {
-        val (m, path) = quantCompactIndex(s, d)
-        graft.plans.AnnRouting.registerQuant(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id")
-        Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
-            queryVec(s, d), 10, Knn.L2)
-          .select(col("vec_id"), round(col("dist"), 6).as("dist"))
-      },
+      (s, d) => routedCodec(s, d, quantCompactIndex(s, d), "qvec"),
       Some(oracleFor(s"list_distance(embedding::DOUBLE[], $qSub)")))
   )
 
@@ -1753,6 +1531,111 @@ object VectorQueries {
     }
   }
 
+  // ───── flat quantized tables: one memo for every codec ─────
+
+  /** How a memoized codec table is written: in one pass over the corpus;
+    * as build(90%) + appendSegment(10%) under the codec trained on the
+    * build split (the RT flow — appended codes may clamp); or that plus
+    * compact(retrain = true), which re-fits the codec to the full corpus
+    * and re-encodes. */
+  private sealed trait Lifecycle
+  private case object Written extends Lifecycle
+  private case object Appended extends Lifecycle
+  private case object Compacted extends Lifecycle
+
+  private val codecCache = scala.collection.concurrent.TrieMap
+    .empty[String, (Quantize.Codec, String)]
+
+  /** Codec table `name` for `d` (the embeddings columns plus the codec's
+    * columns under `codeCol`, sorted by vec_id) and its serving codec.
+    * Training is deterministic, so the serving codec is re-derived from
+    * the rows the stored codes were encoded from — the corpus, the build
+    * split for an Appended table, the stored table for a Compacted one —
+    * and a table a previous process wrote pairs with it. A
+    * marker written last commits the table; without it the table is
+    * rebuilt from scratch. */
+  private def codecTable(s: SparkSession, d: String, name: String,
+                         codeCol: String, train: DataFrame => Quantize.Codec,
+                         life: Lifecycle = Written): (Quantize.Codec, String) = {
+    val path = graft.tables.Derived.path(d, name)
+    codecCache.getOrElseUpdate(path, {
+      val emb = t(s, d, "embeddings")
+      val (build, append) = segSplit(emb)
+      val first = if (life == Written) emb else build
+      lazy val c0 = train(first)
+      val marker = new java.io.File(path, "_GRAFT_CODEC_OK")
+      if (!marker.isFile) {
+        fsDelete(s, path, path + "_old", path + "_compacting")
+        graft.tables.Writer.write(
+          Quantize.quantizeTable(first, "embedding", codeCol, c0), path,
+          sortBy = Seq("vec_id"))
+        if (life != Written)
+          Quantize.appendSegment(append, "embedding", codeCol, path, c0)
+        if (life == Compacted)
+          Quantize.compact(s, path, "embedding", codeCol, "vec_id", c0,
+            retrain = true)
+        marker.createNewFile()
+      }
+      val serving =
+        if (life != Compacted) c0
+        else train(graft.engine.Graft.cachedRead(s, path)
+          .select(emb.columns.map(col): _*))
+      (serving, path)
+    })
+  }
+
+  private def quantIndex(s: SparkSession, d: String) =
+    codecTable(s, d, "quant_embeddings", "qvec", Quantize.train(_, "embedding"))
+  private def quantCosIndex(s: SparkSession, d: String) =
+    codecTable(s, d, "quant_cos_embeddings", "qvec",
+      Quantize.train(_, "embedding", Knn.Cosine))
+  private def quantIpIndex(s: SparkSession, d: String) =
+    codecTable(s, d, "quant_ip_embeddings", "qvec",
+      Quantize.train(_, "embedding", Knn.IP))
+  private def quantSegIndex(s: SparkSession, d: String) =
+    codecTable(s, d, "quantseg_embeddings", "qvec",
+      Quantize.train(_, "embedding"), Appended)
+  private def quantCompactIndex(s: SparkSession, d: String) =
+    codecTable(s, d, "quantcomp_embeddings", "qvec",
+      Quantize.train(_, "embedding"), Compacted)
+  private def quant4Index(s: SparkSession, d: String) =
+    codecTable(s, d, "quant4_embeddings", "q4vec",
+      Quantize.train4(_, "embedding"))
+  private def quant4CosIndex(s: SparkSession, d: String) =
+    codecTable(s, d, "quant4_cos_embeddings", "q4vec",
+      Quantize.train4(_, "embedding", Knn.Cosine))
+  private def quant4IpIndex(s: SparkSession, d: String) =
+    codecTable(s, d, "quant4_ip_embeddings", "q4vec",
+      Quantize.train4(_, "embedding", Knn.IP))
+  private def pqIndex(s: SparkSession, d: String) =
+    codecTable(s, d, "pq_embeddings", "pqvec",
+      Quantize.trainPq(_, "embedding", "vec_id"))
+  private def pqCosIndex(s: SparkSession, d: String) =
+    codecTable(s, d, "pq_cos_embeddings", "pqvec",
+      Quantize.trainPq(_, "embedding", "vec_id", metric = Knn.Cosine))
+  // augmented dim 64 + 1 = 65 = 5·13 → m = 5 (the subvector count must
+  // divide dim + 1, the ivfPqIpIndex rationale)
+  private def pqIpIndex(s: SparkSession, d: String) =
+    codecTable(s, d, "pq_ip_embeddings", "pqvec",
+      Quantize.trainPq(_, "embedding", "vec_id", m = 5, metric = Knn.IP))
+  private def pqSegIndex(s: SparkSession, d: String) =
+    codecTable(s, d, "pqseg_embeddings", "pqvec",
+      Quantize.trainPq(_, "embedding", "vec_id"), Appended)
+  private def binIndex(s: SparkSession, d: String) =
+    codecTable(s, d, "bin_embeddings", "bvec",
+      Quantize.trainBinary(_, "embedding"))
+  private def binResIndex(s: SparkSession, d: String) =
+    codecTable(s, d, "binr_embeddings", "bvec",
+      df => Quantize.BResidual(Quantize.trainBinary(df, "embedding")))
+  private def binResCosIndex(s: SparkSession, d: String) =
+    codecTable(s, d, "binr_cos_embeddings", "bvec",
+      df => Quantize.BResidual(Quantize.trainBinary(df, "embedding",
+        Knn.Cosine)))
+  private def binResIpIndex(s: SparkSession, d: String) =
+    codecTable(s, d, "binr_ip_embeddings", "bvec",
+      df => Quantize.BResidual(Quantize.trainBinary(df, "embedding",
+        Knn.IP)))
+
   // Memoized SEGMENTED clustered graph index per sfDir: clustered build on
   // the 90% split, appendSegment of the 10%. The marker file commits the
   // append (a bare _SUCCESS only proves the initial build), so a crashed
@@ -1762,7 +1645,7 @@ object VectorQueries {
 
   private def hnswSegIndex(s: SparkSession, d: String): String =
     hnswSegCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswseg_embeddings"
+      val path = graft.tables.Derived.path(d, "hnswseg_embeddings")
       if (!new java.io.File(Hnsw.routePath(path), "_GRAFT_SEG_OK").isFile) {
         fsDelete(s, path, Hnsw.routePath(path))
         val (build, append) = segSplit(t(s, d, "embeddings"))
@@ -1772,28 +1655,6 @@ object VectorQueries {
         new java.io.File(Hnsw.routePath(path), "_GRAFT_SEG_OK").createNewFile()
       }
       path
-    })
-
-  // Memoized SEGMENTED int8 table per sfDir: model trained on the 90%
-  // split (deterministic, so it re-derives across processes), table =
-  // build(90%) + appendSegment(10%) encoded with that model.
-  private val quantSegCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.QModel, String)]
-
-  private def quantSegIndex(s: SparkSession, d: String): (Quantize.QModel, String) =
-    quantSegCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/quantseg_embeddings"
-      val (build, append) = segSplit(t(s, d, "embeddings"))
-      val m = Quantize.train(build, "embedding")
-      if (!new java.io.File(path, "_GRAFT_SEG_OK").isFile) {
-        fsDelete(s, path)
-        graft.tables.Writer.write(
-          Quantize.quantizeTable(build, "embedding", "qvec", m), path,
-          sortBy = Seq("vec_id"))
-        Quantize.appendSegment(append, "embedding", "qvec", path, m)
-        new java.io.File(path, "_GRAFT_SEG_OK").createNewFile()
-      }
-      (m, path)
     })
 
   // Memoized COMPACTED clustered graph per sfDir: build(90%) →
@@ -1807,7 +1668,7 @@ object VectorQueries {
 
   private def hnswCompactIndex(s: SparkSession, d: String): String =
     hnswCompactCache.getOrElseUpdate(d, {
-      val parent = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswcomp"
+      val parent = graft.tables.Derived.path(d, "hnswcomp")
       val path = s"$parent/embeddings"
       val marker = new java.io.File(parent, "_GRAFT_COMPACT_OK")
       if (!marker.isFile) {
@@ -1841,7 +1702,7 @@ object VectorQueries {
   // drops and re-derives the segment index, knn/knn.cpp:638-786).
   private def hnswDelIndex(s: SparkSession, d: String): String =
     hnswcCache.getOrElseUpdate(d + "#del", {
-      val parent = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswdel"
+      val parent = graft.tables.Derived.path(d, "hnswdel")
       val path = s"$parent/embeddings"
       val marker = new java.io.File(parent, "_GRAFT_DELETE_OK")
       if (!marker.isFile) {
@@ -1869,7 +1730,7 @@ object VectorQueries {
 
   private def ivfDelIndex(s: SparkSession, d: String): (Ivf.Model, String) =
     ivfDelCache.getOrElseUpdate(d, {
-      val parent = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/ivfdel"
+      val parent = graft.tables.Derived.path(d, "ivfdel")
       val path = s"$parent/embeddings"
       val marker = new java.io.File(parent, "_GRAFT_DELETE_OK")
       val m = Ivf.train(t(s, d, "embeddings"), "embedding", nlist = 16)
@@ -1884,7 +1745,7 @@ object VectorQueries {
 
   private def ivfCompactIndex(s: SparkSession, d: String): (Ivf.Model, String) =
     ivfCompactCache.getOrElseUpdate(d, {
-      val parent = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/ivfcomp"
+      val parent = graft.tables.Derived.path(d, "ivfcomp")
       val path = s"$parent/embeddings"
       val marker = new java.io.File(parent, "_GRAFT_COMPACT_OK")
       val m =
@@ -1906,39 +1767,6 @@ object VectorQueries {
       (m, path)
     })
 
-  // Memoized COMPACTED int8 table per sfDir: build(90%) with a model
-  // trained on the 90%, appendSegment(10%) with that frozen model, then
-  // compact(retrain = true) — re-fit to the full corpus + re-encode +
-  // re-sort to the canonical clustering. The retrained model is a
-  // deterministic function of the compacted table, so a later process
-  // re-derives it instead of persisting model state.
-  private val quantCompactCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.QModel, String)]
-
-  private def quantCompactIndex(s: SparkSession, d: String): (Quantize.QModel, String) =
-    quantCompactCache.getOrElseUpdate(d, {
-      val parent = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/quantcomp"
-      val path = s"$parent/embeddings"
-      val marker = new java.io.File(parent, "_GRAFT_COMPACT_OK")
-      val m =
-        if (marker.isFile)
-          Quantize.train(graft.engine.Graft.cachedRead(s, path).drop("qvec"), "embedding")
-        else {
-          fsDelete(s, parent)
-          val (build, append) = segSplit(t(s, d, "embeddings"))
-          val m0 = Quantize.train(build, "embedding")
-          graft.tables.Writer.write(
-            Quantize.quantizeTable(build, "embedding", "qvec", m0), path,
-            sortBy = Seq("vec_id"))
-          Quantize.appendSegment(append, "embedding", "qvec", path, m0)
-          val m2 = Quantize.compact(s, path, "embedding", "qvec",
-            Seq("vec_id"), m0, retrain = true)
-          marker.createNewFile()
-          m2
-        }
-      (m, path)
-    })
-
   // Memoized IVF index per sfDir (train + clustered write happen once —
   // the reference's CreateKNNBuilder path, knn/knn.cpp:638-786).
   private val ivfCache =
@@ -1946,7 +1774,7 @@ object VectorQueries {
 
   private def ivfIndex(s: SparkSession, d: String): (Ivf.Model, String) =
     ivfCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/ivf_embeddings"
+      val path = graft.tables.Derived.path(d, "ivf_embeddings")
       val m = Ivf.train(t(s, d, "embeddings"), "embedding", nlist = 16)
       Ivf.buildIndex(t(s, d, "embeddings"), "embedding", m, path)
       (m, path)
@@ -1958,7 +1786,7 @@ object VectorQueries {
 
   private def ivfJoinIndex(s: SparkSession, d: String): (Ivf.Model, String) =
     ivfJoinCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/ivf_embeddings_corpus"
+      val path = graft.tables.Derived.path(d, "ivf_embeddings_corpus")
       val corpus = t(s, d, "embeddings").filter(col("vec_id") >= 20)
       val m = Ivf.train(corpus, "embedding", nlist = 16)
       Ivf.buildIndex(corpus, "embedding", m, path)
@@ -1970,7 +1798,7 @@ object VectorQueries {
   // (augmented / normalized), lists clustered over the raw corpus rows.
   private def ivfJoinIpIndex(s: SparkSession, d: String): (Ivf.Model, String) =
     ivfJoinCache.getOrElseUpdate(d + "#ip", {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/ivf_embeddings_corpus_ip"
+      val path = graft.tables.Derived.path(d, "ivf_embeddings_corpus_ip")
       val corpus = t(s, d, "embeddings").filter(col("vec_id") >= 20)
       val m = Ivf.train(corpus, "embedding", nlist = 16, metric = Knn.IP)
       Ivf.buildIndex(corpus, "embedding", m, path)
@@ -1979,7 +1807,7 @@ object VectorQueries {
 
   private def ivfJoinCosIndex(s: SparkSession, d: String): (Ivf.Model, String) =
     ivfJoinCache.getOrElseUpdate(d + "#cos", {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/ivf_embeddings_corpus_cos"
+      val path = graft.tables.Derived.path(d, "ivf_embeddings_corpus_cos")
       val corpus = t(s, d, "embeddings").filter(col("vec_id") >= 20)
       val m = Ivf.train(corpus, "embedding", nlist = 16, metric = Knn.Cosine)
       Ivf.buildIndex(corpus, "embedding", m, path)
@@ -1993,7 +1821,7 @@ object VectorQueries {
 
   private def hnswcIndex(s: SparkSession, d: String): String =
     hnswcCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswc_embeddings"
+      val path = graft.tables.Derived.path(d, "hnswc_embeddings")
       if (!new java.io.File(Hnsw.routePath(path), "_SUCCESS").isFile)
         Hnsw.buildIndexClustered(t(s, d, "embeddings"), "embedding", "vec_id",
           path, Hnsw.Params(m = 8, efC = 64, partitions = 8))
@@ -2004,7 +1832,7 @@ object VectorQueries {
   // sfDir — the route sidecar is written last.
   private def hnswcJoinIndex(s: SparkSession, d: String): String =
     hnswcCache.getOrElseUpdate(d + "#join", {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswc_embeddings_corpus"
+      val path = graft.tables.Derived.path(d, "hnswc_embeddings_corpus")
       if (!new java.io.File(Hnsw.routePath(path), "_SUCCESS").isFile)
         Hnsw.buildIndexClustered(
           t(s, d, "embeddings").filter(col("vec_id") >= 20),
@@ -2019,7 +1847,7 @@ object VectorQueries {
   // augmented space — knnJoinRouted reads the metric from the sidecar.
   private def hnswcJoinIpIndex(s: SparkSession, d: String): String =
     hnswcCache.getOrElseUpdate(d + "#joinip", {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswc_embeddings_corpus_ip"
+      val path = graft.tables.Derived.path(d, "hnswc_embeddings_corpus_ip")
       if (!new java.io.File(Hnsw.routePath(path), "_SUCCESS").isFile)
         Hnsw.buildIndexClustered(
           t(s, d, "embeddings").filter(col("vec_id") >= 20),
@@ -2033,7 +1861,7 @@ object VectorQueries {
   // companion space.
   private def hnswcJoinCosIndex(s: SparkSession, d: String): String =
     hnswcCache.getOrElseUpdate(d + "#joincos", {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswc_embeddings_corpus_cos"
+      val path = graft.tables.Derived.path(d, "hnswc_embeddings_corpus_cos")
       if (!new java.io.File(Hnsw.routePath(path), "_SUCCESS").isFile)
         Hnsw.buildIndexClustered(
           t(s, d, "embeddings").filter(col("vec_id") >= 20),
@@ -2047,7 +1875,7 @@ object VectorQueries {
   // oracle).
   private def hnswqJoinIndex(s: SparkSession, d: String): String =
     hnswcCache.getOrElseUpdate(d + "#quantjoin", {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswq_embeddings_corpus"
+      val path = graft.tables.Derived.path(d, "hnswq_embeddings_corpus")
       if (!new java.io.File(Hnsw.qmodelPath(path), "_SUCCESS").isFile)
         Hnsw.buildIndexClusteredQuantized(
           t(s, d, "embeddings").filter(col("vec_id") >= 20),
@@ -2062,7 +1890,7 @@ object VectorQueries {
   // the metric from the _qmodel sidecar).
   private def hnswqJoinIpIndex(s: SparkSession, d: String): String =
     hnswcCache.getOrElseUpdate(d + "#quantjoinip", {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswq_embeddings_corpus_ip"
+      val path = graft.tables.Derived.path(d, "hnswq_embeddings_corpus_ip")
       if (!new java.io.File(Hnsw.qmodelPath(path), "_SUCCESS").isFile)
         Hnsw.buildIndexClusteredQuantized(
           t(s, d, "embeddings").filter(col("vec_id") >= 20),
@@ -2073,7 +1901,7 @@ object VectorQueries {
 
   private def hnswqJoinCosIndex(s: SparkSession, d: String): String =
     hnswcCache.getOrElseUpdate(d + "#quantjoincos", {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswq_embeddings_corpus_cos"
+      val path = graft.tables.Derived.path(d, "hnswq_embeddings_corpus_cos")
       if (!new java.io.File(Hnsw.qmodelPath(path), "_SUCCESS").isFile)
         Hnsw.buildIndexClusteredQuantized(
           t(s, d, "embeddings").filter(col("vec_id") >= 20),
@@ -2086,7 +1914,7 @@ object VectorQueries {
   // written last, so its _SUCCESS implies graph + route completed.
   private def hnswqIndex(s: SparkSession, d: String): String =
     hnswcCache.getOrElseUpdate(d + "#quant", {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswq_embeddings"
+      val path = graft.tables.Derived.path(d, "hnswq_embeddings")
       if (!new java.io.File(Hnsw.qmodelPath(path), "_SUCCESS").isFile)
         Hnsw.buildIndexClusteredQuantized(t(s, d, "embeddings"), "embedding",
           "vec_id", path, Hnsw.Params(m = 8, efC = 64, partitions = 8))
@@ -2097,7 +1925,7 @@ object VectorQueries {
   // centroids, and radii all live in the unit-normalized companion space.
   private def hnswqCosIndex(s: SparkSession, d: String): String =
     hnswcCache.getOrElseUpdate(d + "#quantcos", {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswq_embeddings_cos"
+      val path = graft.tables.Derived.path(d, "hnswq_embeddings_cos")
       if (!new java.io.File(Hnsw.qmodelPath(path), "_SUCCESS").isFile)
         Hnsw.buildIndexClusteredQuantized(t(s, d, "embeddings"), "embedding",
           "vec_id", path, Hnsw.Params(m = 8, efC = 64, partitions = 8),
@@ -2111,7 +1939,7 @@ object VectorQueries {
   // recorded in the _qerr sidecar).
   private def hnswqSegIndex(s: SparkSession, d: String): String =
     hnswcCache.getOrElseUpdate(d + "#quantseg", {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswqseg_embeddings"
+      val path = graft.tables.Derived.path(d, "hnswqseg_embeddings")
       if (!new java.io.File(path, "_GRAFT_SEG_OK").isFile) {
         fsDelete(s, path, Hnsw.routePath(path), Hnsw.qmodelPath(path),
           Hnsw.qerrPath(path))
@@ -2129,7 +1957,7 @@ object VectorQueries {
   // on the whole corpus into a manifest-committed generation.
   private def hnswqCompactIndex(s: SparkSession, d: String): String =
     hnswcCache.getOrElseUpdate(d + "#quantcompact", {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswqcomp_embeddings"
+      val path = graft.tables.Derived.path(d, "hnswqcomp_embeddings")
       if (!new java.io.File(path + "_manifest").isDirectory) {
         fsDelete(s, path, Hnsw.routePath(path), Hnsw.qmodelPath(path),
           Hnsw.qerrPath(path), path + "_manifest", path + "__g1")
@@ -2145,7 +1973,7 @@ object VectorQueries {
 
   private def hnswcCosIndex(s: SparkSession, d: String): String =
     hnswcCache.getOrElseUpdate(d + "#cos", {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswc_embeddings_cos"
+      val path = graft.tables.Derived.path(d, "hnswc_embeddings_cos")
       if (!new java.io.File(Hnsw.routePath(path), "_SUCCESS").isFile)
         Hnsw.buildIndexClustered(t(s, d, "embeddings"), "embedding", "vec_id",
           path, Hnsw.Params(m = 8, efC = 64, partitions = 8), Knn.Cosine)
@@ -2201,7 +2029,7 @@ object VectorQueries {
 
   private def ivfCosRouteIndex(s: SparkSession, d: String): (Ivf.Model, String) =
     ivfCosRouteCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/ivf_embeddings_cosr"
+      val path = graft.tables.Derived.path(d, "ivf_embeddings_cosr")
       val m = Ivf.train(t(s, d, "embeddings"), "embedding", nlist = 16,
         metric = Knn.Cosine)
       Ivf.buildIndex(t(s, d, "embeddings"), "embedding", m, path)
@@ -2216,29 +2044,13 @@ object VectorQueries {
 
   private def ivfCosIndex(s: SparkSession, d: String): (Ivf.Model, String, Map[Long, Double]) =
     ivfCosCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/ivf_embeddings_cos"
+      val path = graft.tables.Derived.path(d, "ivf_embeddings_cos")
       val base = t(s, d, "embeddings")
         .withColumn("embedding_n", Ivf.normalized(col("embedding")))
       val m = Ivf.train(base, "embedding_n", nlist = 16)
       Ivf.buildIndex(base, "embedding_n", m, path)
       val radii = Ivf.listRadii(s, path, m, "embedding_n")
       (m, path, radii)
-    })
-
-  // Memoized quantized table per sfDir (training is deterministic, so a
-  // table written by a previous process pairs with a freshly-derived model).
-  private val quantCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.QModel, String)]
-
-  private def quantIndex(s: SparkSession, d: String): (Quantize.QModel, String) =
-    quantCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/quant_embeddings"
-      val m = Quantize.train(t(s, d, "embeddings"), "embedding")
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val qdf = Quantize.quantizeTable(t(s, d, "embeddings"), "embedding", "qvec", m)
-        graft.tables.Writer.write(qdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
     })
 
   // Memoized per-list radii for the adaptive search (one aggregation over
@@ -2259,16 +2071,11 @@ object VectorQueries {
 
   private def hnswIndex(s: SparkSession, d: String): String =
     hnswCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnsw_embeddings"
+      val path = graft.tables.Derived.path(d, "hnsw_embeddings")
       if (!new java.io.File(path, "_SUCCESS").isFile)
         Hnsw.buildIndex(t(s, d, "embeddings"), "embedding", "vec_id", path)
       path
     })
-
-  // Memoized 4-bit-quantized table per sfDir (same derivation contract as
-  // quantIndex: deterministic training, rebuild only if absent).
-  private val quant4Cache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.Q4Model, String)]
 
   /** The k=3 windowed cross-join oracle every screened batch-join gate
     * shares (same query/corpus split, same tiebreak), parameterized by
@@ -2301,34 +2108,6 @@ object VectorQueries {
     knnJoinOracleFor("1.0 - (CASE WHEN isnan(list_cosine_similarity(qv, " +
       "cv)) THEN 0.0 ELSE list_cosine_similarity(qv, cv) END)")
 
-  private def quant4Index(s: SparkSession, d: String): (Quantize.Q4Model, String) =
-    quant4Cache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/quant4_embeddings"
-      val m = Quantize.train4(t(s, d, "embeddings"), "embedding")
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val qdf = Quantize.quantize4Table(t(s, d, "embeddings"), "embedding", "q4vec", m)
-        graft.tables.Writer.write(qdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
-
-  // Memoized PQ-coded table per sfDir (deterministic training: id-ordered
-  // sample, evenly-spaced init, lowest-index ties — the model a later
-  // process derives pairs with a previously-written table).
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.PqModel, String)]
-
-  private def pqIndex(s: SparkSession, d: String): (Quantize.PqModel, String) =
-    pqCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/pq_embeddings"
-      val m = Quantize.trainPq(t(s, d, "embeddings"), "embedding", "vec_id")
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val qdf = Quantize.quantizePqTable(t(s, d, "embeddings"), "embedding", "pqvec", m)
-        graft.tables.Writer.write(qdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
-
   // Memoized IVF-ADC index per sfDir (coarse model + residual PQ
   // codebooks + the clustered coded table — Ivf.buildIndexPq's layout).
   private val ivfPqCache = scala.collection.concurrent.TrieMap
@@ -2337,7 +2116,7 @@ object VectorQueries {
   private def ivfPqIndex(s: SparkSession, d: String)
       : (Ivf.Model, Quantize.PqModel, String) =
     ivfPqCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/ivfpq_embeddings"
+      val path = graft.tables.Derived.path(d, "ivfpq_embeddings")
       val m = Ivf.train(t(s, d, "embeddings"), "embedding", nlist = 8)
       val pq =
         if (!new java.io.File(path, "_SUCCESS").isFile)
@@ -2364,7 +2143,7 @@ object VectorQueries {
   private def ivfPqCosIndex(s: SparkSession, d: String)
       : (Ivf.Model, Quantize.PqModel, String) =
     ivfPqCosCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/ivfpq_cos_embeddings"
+      val path = graft.tables.Derived.path(d, "ivfpq_cos_embeddings")
       val normed = t(s, d, "embeddings")
         .withColumn("embn", Ivf.normalized(col("embedding")))
       val m = Ivf.train(normed, "embn", nlist = 8)
@@ -2393,7 +2172,7 @@ object VectorQueries {
   private def ivfPqCompactIndex(s: SparkSession, d: String)
       : (Ivf.Model, Quantize.PqModel, String) =
     ivfPqCompactCache.getOrElseUpdate(d, {
-      val parent = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/ivfpqcomp"
+      val parent = graft.tables.Derived.path(d, "ivfpqcomp")
       val path = s"$parent/embeddings"
       val marker = new java.io.File(parent, "_GRAFT_COMPACT_OK")
       val (build, append) = segSplit(t(s, d, "embeddings"))
@@ -2426,7 +2205,7 @@ object VectorQueries {
   private def ivfPqSegIndex(s: SparkSession, d: String)
       : (Ivf.Model, Quantize.PqModel, String) =
     ivfPqSegCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/ivfpq_seg_embeddings"
+      val path = graft.tables.Derived.path(d, "ivfpq_seg_embeddings")
       val emb = t(s, d, "embeddings")
       val build = emb.filter(col("vec_id") % 10 =!= 3)
       val m = Ivf.train(build, "embedding", nlist = 8)
@@ -2448,76 +2227,6 @@ object VectorQueries {
       (m, pq, path)
     })
 
-  private val pqSegCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.PqModel, String)]
-
-  private def pqSegIndex(s: SparkSession, d: String): (Quantize.PqModel, String) =
-    pqSegCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/pqseg_embeddings"
-      val (build, append) = segSplit(t(s, d, "embeddings"))
-      val m = Quantize.trainPq(build, "embedding", "vec_id")
-      if (!new java.io.File(path, "_GRAFT_SEG_OK").isFile) {
-        fsDelete(s, path)
-        graft.tables.Writer.write(
-          Quantize.quantizePqTable(build, "embedding", "pqvec", m), path,
-          sortBy = Seq("vec_id"))
-        Quantize.appendSegmentPq(append, "embedding", "pqvec", path, m)
-        new java.io.File(path, "_GRAFT_SEG_OK").createNewFile()
-      }
-      (m, path)
-    })
-
-  // Memoized binary-quantized table per sfDir (same derivation contract as
-  // quantIndex: deterministic training, rebuild only if absent).
-  private val binCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.BModel, String)]
-
-  private def binIndex(s: SparkSession, d: String): (Quantize.BModel, String) =
-    binCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/bin_embeddings"
-      val m = Quantize.trainBinary(t(s, d, "embeddings"), "embedding")
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val bdf = Quantize.binarizeTable(t(s, d, "embeddings"), "embedding", "bvec", m)
-        graft.tables.Writer.write(bdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
-
-  // Residual-factor binary table (sign bits + per-vector ‖r‖ and the
-  // least-squares scale — knn/quantizer.h:48-61 semantics).
-  private val binResCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.BModel, String)]
-
-  private[queries] def binResIndex(s: SparkSession, d: String): (Quantize.BModel, String) =
-    binResCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/binr_embeddings"
-      val m = Quantize.trainBinary(t(s, d, "embeddings"), "embedding")
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val bdf = Quantize.binarizeTableResidual(t(s, d, "embeddings"),
-          "embedding", "bvec", "bres", m)
-        graft.tables.Writer.write(bdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
-
-  // COSINE int8 table (r18): the model trains over the unit-normalized
-  // companion and quantize() binds each row into that space internally —
-  // same deterministic derivation contract as quantIndex.
-  private val quantCosCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.QModel, String)]
-
-  private def quantCosIndex(s: SparkSession, d: String): (Quantize.QModel, String) =
-    quantCosCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/quant_cos_embeddings"
-      val m = Quantize.train(t(s, d, "embeddings"), "embedding", Knn.Cosine)
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val qdf = Quantize.quantizeTable(t(s, d, "embeddings"), "embedding",
-          "qvec", m)
-        graft.tables.Writer.write(qdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
-
   // INNER-PRODUCT IVF-ADC index (r18): coarse model trained L2 over the
   // augmented companion, residual codes in that space, M in the marker.
   private val ivfPqIpCache = scala.collection.concurrent.TrieMap
@@ -2526,7 +2235,7 @@ object VectorQueries {
   private def ivfPqIpIndex(s: SparkSession, d: String)
       : (Ivf.Model, Quantize.PqModel, String) =
     ivfPqIpCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/ivfpq_ip_embeddings"
+      val path = graft.tables.Derived.path(d, "ivfpq_ip_embeddings")
       val aug = Ivf.ipAugmentedCompanion(t(s, d, "embeddings"),
         "embedding", "embaug")
       val m = Ivf.train(aug, "embaug", nlist = 8)
@@ -2547,135 +2256,16 @@ object VectorQueries {
       (m, pq, path)
     })
 
-  // INNER-PRODUCT int8 table (r18): codes in the MIPS→L2 augmented space.
-  private val quantIpCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.QModel, String)]
-
-  private def quantIpIndex(s: SparkSession, d: String): (Quantize.QModel, String) =
-    quantIpCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/quant_ip_embeddings"
-      val m = Quantize.train(t(s, d, "embeddings"), "embedding", Knn.IP)
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val qdf = Quantize.quantizeTable(t(s, d, "embeddings"), "embedding",
-          "qvec", m)
-        graft.tables.Writer.write(qdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
-
-  // COSINE 4-bit table (r18): packed nibbles of the normalized companion.
-  private val quant4CosCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.Q4Model, String)]
-
-  private def quant4CosIndex(s: SparkSession, d: String): (Quantize.Q4Model, String) =
-    quant4CosCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/quant4_cos_embeddings"
-      val m = Quantize.train4(t(s, d, "embeddings"), "embedding", Knn.Cosine)
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val qdf = Quantize.quantize4Table(t(s, d, "embeddings"), "embedding",
-          "q4vec", m)
-        graft.tables.Writer.write(qdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
-
-  // COSINE flat-PQ table (r18): codebooks + codes in the normalized space.
-  private val pqCosCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.PqModel, String)]
-
-  private def pqCosIndex(s: SparkSession, d: String): (Quantize.PqModel, String) =
-    pqCosCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/pq_cos_embeddings"
-      val m = Quantize.trainPq(t(s, d, "embeddings"), "embedding", "vec_id",
-        metric = Knn.Cosine)
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val qdf = Quantize.quantizePqTable(t(s, d, "embeddings"), "embedding",
-          "pqvec", m)
-        graft.tables.Writer.write(qdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
-
-  // COSINE residual-factor binary table (r18): bits + factors in the
-  // normalized space.
-  private val binResCosCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.BModel, String)]
-
-  private def binResCosIndex(s: SparkSession, d: String): (Quantize.BModel, String) =
-    binResCosCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/binr_cos_embeddings"
-      val m = Quantize.trainBinary(t(s, d, "embeddings"), "embedding",
-        Knn.Cosine)
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val bdf = Quantize.binarizeTableResidual(t(s, d, "embeddings"),
-          "embedding", "bvec", "bres", m)
-        graft.tables.Writer.write(bdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
-
   // ---- INNER-PRODUCT fixtures (r19): every index family's codes /
   // centroids / radii live in the MIPS→L2 augmented space; raw vectors
   // and walk distances stay 1−dot (metric matrix completion vs
   // knn/knn.h:32-37 — hnswlib serves IP natively, knn/knn.cpp:105-135).
 
-  // IP 4-bit table: packed nibbles of the augmented companion.
-  private val quant4IpCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.Q4Model, String)]
-
-  private def quant4IpIndex(s: SparkSession, d: String): (Quantize.Q4Model, String) =
-    quant4IpCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/quant4_ip_embeddings"
-      val m = Quantize.train4(t(s, d, "embeddings"), "embedding", Knn.IP)
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val qdf = Quantize.quantize4Table(t(s, d, "embeddings"), "embedding",
-          "q4vec", m)
-        graft.tables.Writer.write(qdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
-
-  // IP flat-PQ table: codebooks + codes in the augmented space.
-  private val pqIpCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.PqModel, String)]
-
-  private def pqIpIndex(s: SparkSession, d: String): (Quantize.PqModel, String) =
-    pqIpCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/pq_ip_embeddings"
-      // augmented dim 64 + 1 = 65 = 5·13 → m = 5 (subvector count must
-      // divide dim + 1, the ivfPqIpIndex rationale)
-      val m = Quantize.trainPq(t(s, d, "embeddings"), "embedding", "vec_id",
-        m = 5, metric = Knn.IP)
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val qdf = Quantize.quantizePqTable(t(s, d, "embeddings"), "embedding",
-          "pqvec", m)
-        graft.tables.Writer.write(qdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
-
-  // IP residual-factor binary table: bits + factors in the augmented space.
-  private val binResIpCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.BModel, String)]
-
-  private def binResIpIndex(s: SparkSession, d: String): (Quantize.BModel, String) =
-    binResIpCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/binr_ip_embeddings"
-      val m = Quantize.trainBinary(t(s, d, "embeddings"), "embedding",
-        Knn.IP)
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val bdf = Quantize.binarizeTableResidual(t(s, d, "embeddings"),
-          "embedding", "bvec", "bres", m)
-        graft.tables.Writer.write(bdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
-
   // IP plain (id-mod) NSW graph: sub-graphs built and walked under the
   // raw 1−dot kernel — hnswlib's InnerProductSpace shape.
   private def hnswIpIndex(s: SparkSession, d: String): String =
     hnswCache.getOrElseUpdate(d + "#ip", {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnsw_embeddings_ip"
+      val path = graft.tables.Derived.path(d, "hnsw_embeddings_ip")
       if (!new java.io.File(path, "_SUCCESS").isFile)
         Hnsw.buildIndex(t(s, d, "embeddings"), "embedding", "vec_id", path,
           metric = Knn.IP)
@@ -2686,7 +2276,7 @@ object VectorQueries {
   // augmented space, sub-graphs walk raw 1−dot.
   private def hnswcIpIndex(s: SparkSession, d: String): String =
     hnswcCache.getOrElseUpdate(d + "#ipc", {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswc_embeddings_ip"
+      val path = graft.tables.Derived.path(d, "hnswc_embeddings_ip")
       if (!new java.io.File(Hnsw.routePath(path), "_SUCCESS").isFile)
         Hnsw.buildIndexClustered(t(s, d, "embeddings"), "embedding", "vec_id",
           path, Hnsw.Params(m = 8, efC = 64, partitions = 8), Knn.IP)
@@ -2696,7 +2286,7 @@ object VectorQueries {
   // IP quantized clustered graph: int8 codes of the augmented companion.
   private def hnswqIpIndex(s: SparkSession, d: String): String =
     hnswcCache.getOrElseUpdate(d + "#quantip", {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/hnswq_embeddings_ip"
+      val path = graft.tables.Derived.path(d, "hnswq_embeddings_ip")
       if (!new java.io.File(Hnsw.qmodelPath(path), "_SUCCESS").isFile)
         Hnsw.buildIndexClusteredQuantized(t(s, d, "embeddings"), "embedding",
           "vec_id", path, Hnsw.Params(m = 8, efC = 64, partitions = 8),
@@ -2711,7 +2301,7 @@ object VectorQueries {
 
   private def ivfIpRouteIndex(s: SparkSession, d: String): (Ivf.Model, String) =
     ivfIpRouteCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/ivf_embeddings_ipr"
+      val path = graft.tables.Derived.path(d, "ivf_embeddings_ipr")
       val m = Ivf.train(t(s, d, "embeddings"), "embedding", nlist = 16,
         metric = Knn.IP)
       Ivf.buildIndex(t(s, d, "embeddings"), "embedding", m, path)

@@ -43,8 +43,14 @@ object Derived {
       org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
         bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
         bytes.length, 42L))
-    s"${new java.io.File(sfDir).getName}-${h.take(8)}"
+    s"${new java.io.File(canonical).getName}-${h.take(8)}"
   }
+
+  /** Path of derived artifact `name` for `sfDir` (not built here): every
+    * per-scale-dir artifact — catalog tables, memoized query fixtures,
+    * stores — is keyed by [[sfKey]], so two scale dirs sharing a basename
+    * never share on-disk state. */
+  def path(sfDir: String, name: String): String = s"$root/${sfKey(sfDir)}/$name"
 
   /** Path of derived table `name` for `sfDir`, building it if absent or
     * built under an older layout version. Existence/marker checks go
@@ -54,9 +60,9 @@ object Derived {
     // root is part of the memo key: a test that repoints
     // graft.derived.root mid-JVM must not be served paths built under
     // the previous root (r19 review)
-    built.getOrElseUpdate(s"$root/${sfKey(sfDir)}/$name", {
-      val path = s"$root/${sfKey(sfDir)}/$name"
-      val dir = new org.apache.hadoop.fs.Path(path)
+    built.getOrElseUpdate(path(sfDir, name), {
+      val out = path(sfDir, name)
+      val dir = new org.apache.hadoop.fs.Path(out)
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val success = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
       val marker = new org.apache.hadoop.fs.Path(dir, "_GRAFT_LAYOUT")
@@ -67,13 +73,13 @@ object Derived {
         finally in.close()
       }
       if (!(fs.exists(success) && markerCurrent)) {
-        builders(name).build(spark, sfDir, path)
-        val out = fs.create(marker, true)
-        try out.write((LayoutVersion + "\n")
+        builders(name).build(spark, sfDir, out)
+        val w = fs.create(marker, true)
+        try w.write((LayoutVersion + "\n")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
+        finally w.close()
       }
-      path
+      out
     })
 
   /** Read derived table `name` in its declared format, building it on

@@ -401,7 +401,7 @@ object Ivf {
     val assigned = assign(bound, bcol, m)
       .withColumn("ivf_res", residualCol(col(bcol), col("ivf_cluster"), m))
     val pq = Quantize.trainPq(assigned, "ivf_res", idCol, subM, codeK)
-    val coded = Quantize.quantizePqTable(assigned, "ivf_res", "ivf_pq", pq)
+    val coded = Quantize.quantizeTable(assigned, "ivf_res", "ivf_pq", pq)
       .drop("ivf_res", BoundCol)
     graft.tables.Writer.write(coded, path,
       sortBy = Seq("ivf_cluster"), files = files)
@@ -414,7 +414,7 @@ object Ivf {
     * always L2 (`m` trained L2 — over the normalized companion for
     * cosine, the MIPS→L2 augmented companion for IP); the serving metric
     * picks the binding (r18 adds IP through the Bachrach et al. 2014
-    * augmentation, the [[Quantize.FlatMetricModel]] construction —
+    * augmentation, the [[Quantize.Codec]] construction —
     * corpus [v, √(M²−‖v‖²)], query [q, 0], augmented-L2 order exactly
     * monotone in the inner product; M rides the index's metric marker so
     * appends bind with the BUILD's bound, never a re-estimate). */
@@ -589,7 +589,7 @@ object Ivf {
     val (bound, bcol) = boundSide(df, vecCol, metric, ipM2)
     val assigned = assign(bound, bcol, m)
       .withColumn("ivf_res", residualCol(col(bcol), col("ivf_cluster"), m))
-    Quantize.quantizePqTable(assigned, "ivf_res", "ivf_pq", pq)
+    Quantize.quantizeTable(assigned, "ivf_res", "ivf_pq", pq)
       .drop("ivf_res", BoundCol)
       .repartitionByRange(files, col("ivf_cluster"))
       .sortWithinPartitions(col("ivf_cluster"))
@@ -648,7 +648,7 @@ object Ivf {
     val pq2 = if (retrain) Quantize.trainPq(assigned, "ivf_res",
                 idCol, subM, codeK)
               else pq
-    val coded = Quantize.quantizePqTable(assigned, "ivf_res", "ivf_pq", pq2)
+    val coded = Quantize.quantizeTable(assigned, "ivf_res", "ivf_pq", pq2)
       .drop("ivf_res", BoundCol)
     graft.tables.Writer.write(coded, next,
       sortBy = Seq("ivf_cluster"), files = files)

@@ -2,65 +2,31 @@ package graft.vector
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+import org.apache.spark.sql.types._
 
-/** Scalar (int8) vector quantization with exact rescoring (K6 — ref
+/** Flat vector quantization with exact rescoring (K6 — ref
   * knn/quantizer.cpp:45-700, QuantizationSettings_t quantizer.h:28-60).
   *
-  * Shape: per-dimension min/max train → 8-bit codes stored as a BinaryType
-  * column (4x smaller scans than float32) → coarse top-(k·refine) on
-  * dequantized distance → EXACT rescore of the survivors on the float
-  * column. The reference rescans original vectors for rescoring the same
-  * way; our coarse error bound (≤ range/255 per dim) makes `refine` a small
-  * constant.
+  * Shape: train a [[Codec]] → codes stored beside the float column → coarse
+  * top-(k·refine) on the code distance → EXACT rescore of the survivors on
+  * the float column. The reference rescans original vectors for rescoring
+  * the same way. Five codecs share that one lifecycle: int8 ([[QModel]]),
+  * 4-bit ([[Q4Model]]), product quantization ([[PqModel]]), 1-bit
+  * ([[BModel]]) and residual-corrected 1-bit ([[BResidual]]); every
+  * lifecycle step below is one function over [[Codec]].
   *
-  * 100 TB story: the coarse pass scans only (id, qvec) — a quarter of the
-  * vector bytes; the rescore touches k·refine rows. Training is one pass
-  * with per-partition array accumulators (numPartitions rows to the
+  * 100 TB story: the coarse pass scans only (id, codes) — a fraction of
+  * the vector bytes; the rescore touches k·refine rows. Training is one
+  * pass with per-partition array accumulators (numPartitions rows to the
   * driver, no shuffle).
   */
 object Quantize {
 
-  /** The SERVING-metric contract shared by all four flat quantized
-    * models (r18, VERDICT r17 #2 — the reference serves L2/IP/cosine on
-    * every quantized index, knn/knn.h:32-37; the quantizer applies to
-    * all spaces, knn/quantizer.cpp:45-700): a model carries the metric
-    * it was TRAINED for, and codes live in that metric's SCREEN SPACE —
-    * an L2 construction where coarse-L2 order tracks the metric's order:
-    *
-    *  - L2: the raw vectors;
-    *  - COSINE: the unit-normalized companion (cosine distance of a unit
-    *    pair is half its squared L2 — the r15 quantized-graph / r17
-    *    IVF-ADC construction);
-    *  - IP: the published MIPS→L2 augmentation (Bachrach et al. 2014,
-    *    "Speeding Up the Xbox Recommender System Using a Euclidean
-    *    Transformation for Inner-Product Spaces"): corpus rows bind to
-    *    x' = [x, √(M² − ‖x‖²)] with M = max corpus norm (a train-time
-    *    stat the model carries), queries to q' = [q, 0] — then
-    *    ‖q'−x'‖² = ‖q‖² + M² − 2⟨q,x⟩, EXACTLY monotone in the inner
-    *    product, so the L2 screens serve MIPS with no new kernel.
-    *
-    * [[QModel.quantize]]/[[BModel.binarize]]/[[PqModel.encode]] bind each
-    * CORPUS input internally (appends through the existing append/
-    * streaming paths encode correctly with zero caller changes); screens
-    * bind the QUERY side via [[FlatMetricModel.bindQuery]]. The exact
-    * rescore always runs the metric kernel on the RAW float column.
-    * IP drift caveat (same contract as the min/max clamp): an appended
-    * row with ‖v‖ > the trained M clamps its augmented coordinate to 0 —
-    * screen-only misranking risk for that row until a retraining compact
-    * refreshes M. */
-  private[vector] def requireFlatMetric(trained: Knn.Metric,
-                                        serving: Knn.Metric): Unit =
-    require(trained == serving,
-      s"this model was trained for $trained but is being served as " +
-        s"$serving — codes live in the trained metric's screen space " +
-        "(train with the serving metric)")
-
-  /** Corpus-side screen-space binding — ONE definition shared by the four
-    * flat models AND the IVF-ADC family (the exactness of the MIPS→L2
-    * trick depends on every corpus side using the exact same
-    * construction): identity for L2, unit-normalize for cosine,
-    * [v, √(M²−‖v‖²)] for IP with `ipMaxNorm` = the trained bound M. */
+  /** Corpus-side screen-space binding — ONE definition shared by the flat
+    * codecs AND the IVF-ADC family (the exactness of the MIPS→L2 trick
+    * depends on every corpus side using the exact same construction):
+    * identity for L2, unit-normalize for cosine, [v, √(M²−‖v‖²)] for IP
+    * with `ipMaxNorm` = the trained bound M. */
   private[vector] def bindCorpusSide(metric: Knn.Metric, ipMaxNorm: Float,
                                      v: Array[Float]): Array[Float] =
     metric match {
@@ -104,30 +70,96 @@ object Quantize {
       case _ => vec
     }
 
-  /** Trained-metric space binding shared by the four flat models. */
-  sealed trait FlatMetricModel {
+  /** One flat quantized codec: what a family stores per vector and how
+    * its coarse screen scores a stored code against a query.
+    *
+    * SERVING-metric contract (r18 — the reference serves L2/IP/cosine on
+    * every quantized index, knn/knn.h:32-37; the quantizer applies to all
+    * spaces, knn/quantizer.cpp:45-700): a codec carries the metric it was
+    * TRAINED for, which is the metric it serves, and its codes live in
+    * that metric's SCREEN SPACE — an L2 construction where coarse-L2 order
+    * tracks the metric's order:
+    *
+    *  - L2: the raw vectors;
+    *  - COSINE: the unit-normalized companion (cosine distance of a unit
+    *    pair is half its squared L2 — the r15 quantized-graph / r17
+    *    IVF-ADC construction);
+    *  - IP: the published MIPS→L2 augmentation (Bachrach et al. 2014,
+    *    "Speeding Up the Xbox Recommender System Using a Euclidean
+    *    Transformation for Inner-Product Spaces"): corpus rows bind to
+    *    x' = [x, √(M² − ‖x‖²)] with M = max corpus norm (a train-time
+    *    stat the codec carries), queries to q' = [q, 0] — then
+    *    ‖q'−x'‖² = ‖q‖² + M² − 2⟨q,x⟩, EXACTLY monotone in the inner
+    *    product, so the L2 screens serve MIPS with no new kernel.
+    *
+    * [[encode]] binds each CORPUS input internally (appends through the
+    * append/streaming paths encode correctly with zero caller changes);
+    * [[prepare]] binds the QUERY side. The exact rescore always runs the
+    * metric kernel on the RAW float column. IP drift caveat (same contract
+    * as the min/max clamp): an appended row with ‖v‖ > the trained M
+    * clamps its augmented coordinate to 0 — screen-only misranking risk
+    * for that row until a retraining compact refreshes M. */
+  sealed trait Codec extends Serializable {
+    /** One row's stored code, as the screen reads it. */
+    type Code
+    /** One query's screen-side state: the bound query, the ADC table,
+      * the sign bits or the residual terms. */
+    type Prepared <: AnyRef
+    /** The concrete codec type [[retrain]] returns. */
+    type Self >: this.type <: Codec
+
     def metric: Knn.Metric
-    /** Max corpus L2 norm at training (IP models only — the augmentation
+    /** Max corpus L2 norm at training (IP codecs only — the augmentation
       * bound M; 0 otherwise). */
     def ipMaxNorm: Float
-    /** Corpus-side binding into the screen space (encode path). */
+    /** Code-space dimension (the IP augmentation adds one). */
+    def dim: Int
+    /** Default candidate multiple: the true top-k must sit in the top
+      * k·refine coarse set. Coarser codes default higher. */
+    def refine: Int
+    /** Type of the code column. */
+    def codeType: DataType
+    /** The stored columns for code column `codeCol`, code column first. */
+    def columns(codeCol: String): Seq[StructField] =
+      Seq(StructField(codeCol, codeType))
+    /** Corpus-side encode (binds into the screen space internally). */
+    def encode(v: Array[Float]): Code
+    /** `c` as row values in [[columns]] order. */
+    def stored(c: Code): Seq[Any] = Seq(c)
+    /** The code stored in `r`'s [[columns]], the first at index `at`. */
+    def code(r: Row, at: Int): Code
+    /** Query-side state, built once per query per partition. */
+    def prepare(q: Array[Float]): Prepared
+    /** Coarse screen distance of a stored code to a prepared query. */
+    def score(c: Code, p: Prepared): Double
+    /** The same codec shape and metric re-fit to `df`; `idCol` orders
+      * PQ's deterministic training sample. */
+    def retrain(df: DataFrame, vecCol: String, idCol: String): Self
+
+    /** `refine` if positive, else this codec's default. */
+    final def refineOr(refine: Int): Int =
+      if (refine > 0) refine else this.refine
     private[vector] final def bindCorpus(v: Array[Float]): Array[Float] =
       bindCorpusSide(metric, ipMaxNorm, v)
-    /** Query-side binding into the screen space (screen path). */
     private[vector] final def bindQuery(q: Array[Float]): Array[Float] =
       bindQuerySide(metric, q)
-    /** Expected RAW stored-vector length for a code/threshold width of
-      * `codeDim`: the IP augmentation adds one code dimension that never
-      * exists in the stored float column (integrity checks compare raw
-      * rows against this, not against the augmented dim). */
-    private[vector] final def rawDim(codeDim: Int): Int =
-      if (metric == Knn.IP) codeDim - 1 else codeDim
+    /** Expected RAW stored-vector length: the IP augmentation adds one
+      * code dimension that never exists in the stored float column. */
+    private[vector] final def rawDim: Int =
+      if (metric == Knn.IP) dim - 1 else dim
   }
 
+  /** int8 scalar codec: per-dimension min/max, 256 levels. Our coarse
+    * error bound (≤ range/255 per dim) makes `refine` a small constant. */
   final case class QModel(mins: Array[Float], maxs: Array[Float],
                           metric: Knn.Metric = Knn.L2,
-                          ipMaxNorm: Float = 0.0f) extends FlatMetricModel {
+                          ipMaxNorm: Float = 0.0f) extends Codec {
+    type Code = Array[Byte]
+    type Prepared = Array[Float]
+    type Self = QModel
     def dim: Int = mins.length
+    def refine: Int = 8
+    def codeType: DataType = BinaryType
     def scale(i: Int): Float = {
       val r = maxs(i) - mins(i)
       if (r == 0.0f) 1.0f else r / 255.0f
@@ -176,6 +208,12 @@ object Quantize {
       }
       math.sqrt(acc)
     }
+    def encode(v: Array[Float]): Array[Byte] = quantize(v)
+    def code(r: Row, at: Int): Array[Byte] = r.getAs[Array[Byte]](at)
+    def prepare(q: Array[Float]): Array[Float] = bindQuery(q)
+    def score(c: Array[Byte], p: Array[Float]): Double = l2(c, p)
+    def retrain(df: DataFrame, vecCol: String, idCol: String): QModel =
+      train(df, vecCol, metric)
   }
 
   /** The training-side column in the model's screen space (one codegen
@@ -197,7 +235,7 @@ object Quantize {
     * the driver folds numPartitions pairs. min/max are order-independent,
     * so the model is bit-reproducible across partitionings.
     * `metric = Cosine` trains over the unit-normalized companion — the
-    * space the model's codes then live in ([[requireFlatMetric]]). */
+    * space the model's codes then live in ([[Codec]]). */
   def train(df: DataFrame, vecCol: String,
             metric: Knn.Metric = Knn.L2): QModel = {
     import df.sparkSession.implicits._
@@ -228,69 +266,22 @@ object Quantize {
     QModel(mins, maxs, metric, mNorm)
   }
 
-  /** Append `qCol: binary` with the int8 codes. */
-  def quantizeTable(df: DataFrame, vecCol: String, qCol: String,
-                    m: QModel): DataFrame = {
-    val schema = df.schema.add(StructField(qCol, BinaryType))
-    val vecIdx = df.schema.fieldIndex(vecCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val v = r.getSeq[Float](vecIdx).toArray
-        Row.fromSeq(r.toSeq :+ m.quantize(v))
-      }
-    }(Encoders.row(schema))
-  }
-
-  /** The coarse-screen candidate ids: top-`n` by int8-code L2 distance —
-    * a declarative sub-plan (typed map + TakeOrdered), shared by
-    * [[searchRescore]] and [[graft.plans.AnnRoutingRule]]'s automatic
-    * quantized route (which splices it under the original Sort/Limit).
-    * `query` is RAW; a cosine model screens against its normalized copy
-    * (the space the codes live in). */
-  def coarseIds(qdf: DataFrame, qCol: String, idCol: String, m: QModel,
-                query: Array[Float], n: Int): DataFrame = {
-    import qdf.sparkSession.implicits._
-    val qB = qdf.sparkSession.sparkContext
-      .broadcast((m, m.bindQuery(query)))
-    qdf.select(col(idCol).cast("long").as("cid"), col(qCol))
-      .as[(Long, Array[Byte])]
-      .map { case (id, codes) =>
-        val (mm, qv) = qB.value
-        (id, mm.l2(codes, qv))
-      }
-      .toDF("cid", "adist")
-      .orderBy(col("adist").asc, col("cid").asc)
-      .limit(n)
-      .select(col("cid").as(idCol))
-  }
-
-  /** Top-k search: coarse pass on the quantized codes (k·refine survivors),
-    * exact rescore on the float vectors. Returns (idCol, dist) best-first,
-    * ties by id — same contract as [[Knn.knn]]. `metric` must match the
-    * model's trained metric ([[requireFlatMetric]]); cosine screens in the
-    * normalized code space and rescores with the exact cosine kernel on
-    * the raw floats. */
-  def searchRescore(qdf: DataFrame, vecCol: String, qCol: String,
-                    idCol: String, m: QModel, query: Array[Float], k: Int,
-                    metric: Knn.Metric = Knn.L2, refine: Int = 8): DataFrame = {
-    requireFlatMetric(m.metric, metric)
-    val survivors = qdf.join(
-      coarseIds(qdf, qCol, idCol, m, query, k * refine), Seq(idCol))
-    Knn.knn(survivors, vecCol, idCol, query, k, metric)
-  }
-
-  /** 4-bit scalar quantization (the reference's third variant — the 4-bit
+  /** 4-bit scalar codec (the reference's third variant — the 4-bit
     * query-side representation of knn/quantizer.cpp:45-700, quantizer.h:
-    * 28-60): per-dimension min/max train, 16 levels, TWO dims packed per
-    * byte (even dim = low nibble, odd dim = high nibble). 8x smaller than
+    * 28-60): per-dimension min/max, 16 levels, TWO dims packed per byte
+    * (even dim = low nibble, odd dim = high nibble). 8x smaller than
     * float32 — between int8 (4x) and 1-bit (64x) on the scan-bytes /
-    * coarse-precision tradeoff. Same coarse + exact-rescore contract as
-    * the int8 path.
-    */
+    * coarse-precision tradeoff, so `refine` defaults between the int8 and
+    * binary settings. */
   final case class Q4Model(mins: Array[Float], maxs: Array[Float],
                            metric: Knn.Metric = Knn.L2,
-                           ipMaxNorm: Float = 0.0f) extends FlatMetricModel {
+                           ipMaxNorm: Float = 0.0f) extends Codec {
+    type Code = Array[Byte]
+    type Prepared = Array[Float]
+    type Self = Q4Model
     def dim: Int = mins.length
+    def refine: Int = 12
+    def codeType: DataType = BinaryType
     def bytes: Int = (dim + 1) >> 1
     def scale(i: Int): Float = {
       val r = maxs(i) - mins(i)
@@ -325,6 +316,12 @@ object Quantize {
       }
       math.sqrt(acc)
     }
+    def encode(v: Array[Float]): Array[Byte] = quantize(v)
+    def code(r: Row, at: Int): Array[Byte] = r.getAs[Array[Byte]](at)
+    def prepare(q: Array[Float]): Array[Float] = bindQuery(q)
+    def score(c: Array[Byte], p: Array[Float]): Double = l2(c, p)
+    def retrain(df: DataFrame, vecCol: String, idCol: String): Q4Model =
+      train4(df, vecCol, metric)
   }
 
   /** Train per-dimension min/max (one distributed pass — shared stats shape
@@ -335,64 +332,24 @@ object Quantize {
     Q4Model(m.mins, m.maxs, metric, m.ipMaxNorm)
   }
 
-  /** Append `qCol: binary` with the packed 4-bit codes (2 dims/byte). */
-  def quantize4Table(df: DataFrame, vecCol: String, qCol: String,
-                     m: Q4Model): DataFrame = {
-    val schema = df.schema.add(StructField(qCol, BinaryType))
-    val vecIdx = df.schema.fieldIndex(vecCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val v = r.getSeq[Float](vecIdx).toArray
-        Row.fromSeq(r.toSeq :+ m.quantize(v))
-      }
-    }(Encoders.row(schema))
-  }
-
-  /** Top-k search over the 4-bit codes: coarse pass (k·refine survivors,
-    * deterministic (adist, id) order), exact rescore on the float column.
-    * Same (idCol, dist) best-first contract as [[Knn.knn]]. 4-bit is
-    * coarser than int8, so `refine` defaults between the int8 and binary
-    * settings. */
-  /** The 4-bit coarse-screen candidate ids: top-`n` by packed-nibble code
-    * L2 distance — same shape and sharing contract as [[coarseIds]] (the
-    * automatic route splices it under the original Sort/Limit). */
-  def coarseIds4(qdf: DataFrame, qCol: String, idCol: String, m: Q4Model,
-                 query: Array[Float], n: Int): DataFrame = {
-    import qdf.sparkSession.implicits._
-    val qB = qdf.sparkSession.sparkContext
-      .broadcast((m, m.bindQuery(query)))
-    qdf.select(col(idCol).cast("long").as("cid"), col(qCol))
-      .as[(Long, Array[Byte])]
-      .map { case (id, codes) =>
-        val (mm, qv) = qB.value
-        (id, mm.l2(codes, qv))
-      }
-      .toDF("cid", "adist")
-      .orderBy(col("adist").asc, col("cid").asc)
-      .limit(n)
-      .select(col("cid").as(idCol))
-  }
-
-  def searchRescore4(qdf: DataFrame, vecCol: String, qCol: String,
-                     idCol: String, m: Q4Model, query: Array[Float], k: Int,
-                     metric: Knn.Metric = Knn.L2, refine: Int = 12): DataFrame = {
-    requireFlatMetric(m.metric, metric)
-    val survivors = qdf.join(
-      coarseIds4(qdf, qCol, idCol, m, query, k * refine), Seq(idCol))
-    Knn.knn(survivors, vecCol, idCol, query, k, metric)
-  }
-
-  /** 1-bit binary quantization (the reference's binary path with centroid
+  /** 1-bit binary codec (the reference's binary path with centroid
     * residual thresholds — knn/quantizer.cpp:45-700, `BQ` in
     * quantizer.h:28-60): bit i = (v(i) > threshold(i)) with per-dimension
-    * mean thresholds, packed 64 bits/word. 64x smaller than float32: at
-    * 100 TB of vectors the Hamming screen scans ~1.6 TB of codes, and
-    * XOR+popcount is the cheapest distance kernel there is.
+    * mean thresholds, packed 64 bits/word, screened by XOR+popcount
+    * Hamming distance. 64x smaller than float32: at 100 TB of vectors the
+    * Hamming screen scans ~1.6 TB of codes, and XOR+popcount is the
+    * cheapest distance kernel there is. The coarsest proxy of the scalar
+    * codecs, so `refine` defaults higher.
     */
   final case class BModel(thresholds: Array[Float],
                           metric: Knn.Metric = Knn.L2,
-                          ipMaxNorm: Float = 0.0f) extends FlatMetricModel {
+                          ipMaxNorm: Float = 0.0f) extends Codec {
+    type Code = Array[Long]
+    type Prepared = Array[Long]
+    type Self = BModel
     def dim: Int = thresholds.length
+    def refine: Int = 16
+    def codeType: DataType = ArrayType(LongType)
     def words: Int = (dim + 63) >> 6
     /** Sign bits of a CORPUS row (bound into the screen space). */
     def binarize(v0: Array[Float]): Array[Long] =
@@ -473,6 +430,70 @@ object Quantize {
       val dot = 2.0 * s1 - sumQr
       qnorm2 + rnorm.toDouble * rnorm - 2.0 * rscale * dot
     }
+    def encode(v: Array[Float]): Array[Long] = binarize(v)
+    override def stored(c: Array[Long]): Seq[Any] = Seq(c.toSeq)
+    def code(r: Row, at: Int): Array[Long] = r.getSeq[Long](at).toArray
+    def prepare(q: Array[Float]): Array[Long] = binarizeQuery(q)
+    def score(c: Array[Long], p: Array[Long]): Double = hamming(c, p).toDouble
+    def retrain(df: DataFrame, vecCol: String, idCol: String): BModel =
+      trainBinary(df, vecCol, metric)
+  }
+
+  /** Residual-corrected binary codec: a [[BModel]]'s sign bits plus the
+    * per-vector residual factors in `factorCol` (struct<norm, scale> —
+    * the reference's binary-quantization factor block, knn/quantizer.h:
+    * 48-61, knn/quantizer.cpp residual encode). Costs 8 bytes/vector and
+    * buys the magnitude-aware [[BModel.estimateL2]] screen — reading
+    * ~(8·d/64 + 8) bytes per vector against the float column's 4·d —
+    * which reaches equal exactness at a several-fold smaller refine than
+    * raw Hamming (QuantizeSpec). The estimator lives in the trained
+    * space: normalized for cosine (where normalized-L2² order == cosine
+    * order), augmented for IP, raw for L2. */
+  final case class BResidual(model: BModel, factorCol: String = "bres")
+      extends Codec {
+    type Code = (Array[Long], Float, Float)
+    type Prepared = (Array[Double], Double, Double)
+    type Self = BResidual
+    def metric: Knn.Metric = model.metric
+    def ipMaxNorm: Float = model.ipMaxNorm
+    def dim: Int = model.dim
+    def refine: Int = 16
+    def codeType: DataType = model.codeType
+    override def columns(codeCol: String): Seq[StructField] =
+      model.columns(codeCol) :+ StructField(factorCol, StructType(Seq(
+        StructField("norm", FloatType), StructField("scale", FloatType))))
+    def encode(v0: Array[Float]): (Array[Long], Float, Float) = {
+      // bind ONCE into the screen space — factors and bits share it
+      // (the r15-2 encode-once contract)
+      val v = bindCorpus(v0)
+      val (rn, rs) = model.residualFactorsBound(v)
+      (model.binarizeBound(v), rn, rs)
+    }
+    override def stored(c: (Array[Long], Float, Float)): Seq[Any] =
+      Seq(c._1.toSeq, Row(c._2, c._3))
+    def code(r: Row, at: Int): (Array[Long], Float, Float) = {
+      val f = r.getStruct(at + 1)
+      (model.code(r, at), f.getFloat(0), f.getFloat(1))
+    }
+    def prepare(q0: Array[Float]): (Array[Double], Double, Double) = {
+      val q = bindQuery(q0)
+      val qr = new Array[Double](dim)
+      var qn2 = 0.0
+      var sq = 0.0
+      var i = 0
+      while (i < dim) {
+        qr(i) = q(i).toDouble - model.thresholds(i)
+        qn2 += qr(i) * qr(i)
+        sq += qr(i)
+        i += 1
+      }
+      (qr, qn2, sq)
+    }
+    def score(c: (Array[Long], Float, Float),
+              p: (Array[Double], Double, Double)): Double =
+      model.estimateL2(c._1, c._2, c._3, p._1, p._2, p._3)
+    def retrain(df: DataFrame, vecCol: String, idCol: String): BResidual =
+      copy(model = model.retrain(df, vecCol, idCol))
   }
 
   /** Train per-dimension mean thresholds: per-partition (sum, count) array
@@ -506,149 +527,6 @@ object Quantize {
     BModel(total.map(s => (s / n).toFloat), metric, mNorm)
   }
 
-  /** Append `bCol: array<bigint>` with the packed sign bits. */
-  def binarizeTable(df: DataFrame, vecCol: String, bCol: String,
-                    m: BModel): DataFrame = {
-    val schema = df.schema.add(StructField(bCol,
-      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType)))
-    val vecIdx = df.schema.fieldIndex(vecCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val v = r.getSeq[Float](vecIdx).toArray
-        Row.fromSeq(r.toSeq :+ m.binarize(v).toSeq)
-      }
-    }(Encoders.row(schema))
-  }
-
-  /** Top-k search: Hamming screen on the packed codes (k·refine survivors,
-    * deterministic (hamming, id) order), exact rescore on the float column.
-    * Same (idCol, dist) best-first contract as [[Knn.knn]]. Binary codes are
-    * a coarser proxy than int8, so `refine` defaults higher. */
-  /** The Hamming coarse-screen candidate ids: top-`n` by XOR+popcount over
-    * the packed sign bits — same sharing contract as [[coarseIds]]. */
-  def coarseIdsBinary(bdf: DataFrame, bCol: String, idCol: String, m: BModel,
-                      query: Array[Float], n: Int): DataFrame = {
-    import bdf.sparkSession.implicits._
-    // binarize normalizes internally for a cosine model
-    val qB = bdf.sparkSession.sparkContext.broadcast((m, m.binarizeQuery(query)))
-    bdf.select(col(idCol).cast("long").as("cid"), col(bCol))
-      .as[(Long, Seq[Long])]
-      .map { case (id, code) =>
-        val (mm, qc) = qB.value
-        (id, mm.hamming(code.toArray, qc))
-      }
-      .toDF("cid", "hd")
-      .orderBy(col("hd").asc, col("cid").asc)
-      .limit(n)
-      .select(col("cid").as(idCol))
-  }
-
-  def searchHammingRescore(bdf: DataFrame, vecCol: String, bCol: String,
-                           idCol: String, m: BModel, query: Array[Float],
-                           k: Int, metric: Knn.Metric = Knn.L2,
-                           refine: Int = 16): DataFrame = {
-    requireFlatMetric(m.metric, metric)
-    val survivors = bdf.join(
-      coarseIdsBinary(bdf, bCol, idCol, m, query, k * refine), Seq(idCol))
-    Knn.knn(survivors, vecCol, idCol, query, k, metric)
-  }
-
-  /** Binarize WITH the per-vector residual factor (`rCol: float` =
-    * ‖v − thresholds‖) stored beside the sign bits — the reference's
-    * binary-quantization factor block (knn/quantizer.h:48-61,
-    * knn/quantizer.cpp residual encode). Costs 4 bytes/vector and buys
-    * the residual-corrected screen below. */
-  def binarizeTableResidual(df: DataFrame, vecCol: String, bCol: String,
-                            rCol: String, m: BModel): DataFrame = {
-    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
-    val factors = StructType(Seq(
-      StructField("norm", FloatType), StructField("scale", FloatType)))
-    val schema = df.schema
-      .add(StructField(bCol, ArrayType(LongType)))
-      .add(StructField(rCol, factors))
-    val vecIdx = df.schema.fieldIndex(vecCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        // bind ONCE into the screen space — factors and bits share it
-        // (the r15-2 encode-once contract)
-        val bv = m.bindCorpus(r.getSeq[Float](vecIdx).toArray)
-        val (rn, rs) = m.residualFactorsBound(bv)
-        Row.fromSeq(r.toSeq :+ (m.binarizeBound(bv).toSeq: Seq[Long]) :+
-          Row(rn, rs))
-      }
-    }(Encoders.row(schema))
-  }
-
-  /** Residual-corrected coarse screen: rank by [[BModel.estimateL2]] over
-    * (bits, residual norm) — reads ~(8·d/64 + 4) bytes per vector against
-    * the float column's 4·d, the same compact-screen economics as the
-    * plain Hamming pass, but magnitude-aware: QuantizeSpec shows it
-    * reaches exactness with a several-fold smaller candidate set. L2-family
-    * estimator (the fixture/gate metric); other metrics take the plain
-    * Hamming screen. */
-  def coarseIdsBinaryResidual(bdf: DataFrame, bCol: String, rCol: String,
-                              idCol: String, m: BModel, query: Array[Float],
-                              n: Int): DataFrame = {
-    import bdf.sparkSession.implicits._
-    // the estimator lives in the trained space: normalized for a cosine
-    // model (where normalized-L2² order == cosine order), raw for L2
-    val bq = m.bindQuery(query)
-    val qr = new Array[Double](m.dim)
-    var qnorm2 = 0.0
-    var sumQr = 0.0
-    var i = 0
-    while (i < m.dim) {
-      qr(i) = bq(i).toDouble - m.thresholds(i)
-      qnorm2 += qr(i) * qr(i)
-      sumQr += qr(i)
-      i += 1
-    }
-    val qB = bdf.sparkSession.sparkContext
-      .broadcast((m, qr, qnorm2, sumQr))
-    bdf.select(col(idCol).cast("long").as("cid"), col(bCol),
-        col(s"$rCol.norm"), col(s"$rCol.scale"))
-      .as[(Long, Seq[Long], Float, Float)]
-      .map { case (id, code, rnorm, rscale) =>
-        val (mm, q2, qn2, sq) = qB.value
-        (id, mm.estimateL2(code.toArray, rnorm, rscale, q2, qn2, sq))
-      }
-      .toDF("cid", "est")
-      .orderBy(col("est").asc, col("cid").asc)
-      .limit(n)
-      .select(col("cid").as(idCol))
-  }
-
-  /** [[searchHammingRescore]] with the residual-corrected screen: same
-    * exact-rescore contract. The default candidate multiple matches the
-    * plain screen's — at EQUAL refine the corrected score is strictly
-    * safer (its worst-case true-top-k rank is a fraction of Hamming's on
-    * the fixture), and equal exactness is reached at a several-fold
-    * smaller refine (QuantizeSpec). */
-  def searchHammingRescoreResidual(bdf: DataFrame, vecCol: String,
-                                   bCol: String, rCol: String, idCol: String,
-                                   m: BModel, query: Array[Float], k: Int,
-                                   refine: Int = 16,
-                                   metric: Knn.Metric = Knn.L2): DataFrame = {
-    requireFlatMetric(m.metric, metric)
-    val survivors = bdf.join(
-      coarseIdsBinaryResidual(bdf, bCol, rCol, idCol, m, query, k * refine),
-      Seq(idCol))
-    Knn.knn(survivors, vecCol, idCol, query, k, metric)
-  }
-
-  // ───── I9 for the quantized families: segment maintenance ─────
-  //
-  // The reference's RT flow trains a quantizer once and then encodes every
-  // incoming segment with it (builder train/add/save lifecycle,
-  // knn/knn.cpp:638-786; knn/knn.h:135-144) — OPTIMIZE may retrain. The
-  // Spark analog: a quantized table is an ordinary Parquet dir, so append =
-  // encode ONLY the new batch with the existing model and add its files
-  // (the existing table is never touched — the 100 TB append cost is
-  // O(batch)); compact = re-sort to the canonical clustering and optionally
-  // re-fit the model to the full corpus. Every coarse screen reads all
-  // files, so search is correct IMMEDIATELY after an append; the routed
-  // plan's cached relation is invalidated via the AnnRouting epoch.
-
   // ------------------------------------------------------------------
   // PRODUCT QUANTIZATION (published: Jégou, Douze & Schmid, "Product
   // Quantization for Nearest Neighbor Search", TPAMI 2011 — the
@@ -671,17 +549,24 @@ object Quantize {
   // ------------------------------------------------------------------
 
   /** codebooks(s)(c) = centroid c of subspace s (length dim/M each).
-    * `metric` is the flat-family serving metric ([[requireFlatMetric]]);
-    * the IVF-ADC family trains its codebooks on residuals and keeps the
-    * default L2 here — its serving metric rides the index's marker
-    * ([[graft.vector.Ivf]]), not this field. */
+    * `metric` is the flat-codec serving metric ([[Codec]]); the IVF-ADC
+    * family trains its codebooks on residuals and keeps the default L2
+    * here — its serving metric rides the index's marker
+    * ([[graft.vector.Ivf]]), not this field. ADC is the coarsest flat
+    * screen, so `refine` defaults to 32, the multiple every PQ gate
+    * passes. */
   final case class PqModel(codebooks: Array[Array[Array[Float]]],
                            metric: Knn.Metric = Knn.L2,
-                           ipMaxNorm: Float = 0.0f) extends FlatMetricModel {
+                           ipMaxNorm: Float = 0.0f) extends Codec {
+    type Code = Array[Byte]
+    type Prepared = Array[Double]
+    type Self = PqModel
     def m: Int = codebooks.length
     def k: Int = codebooks(0).length
     def subDim: Int = codebooks(0)(0).length
     def dim: Int = m * subDim
+    def refine: Int = 32
+    def codeType: DataType = BinaryType
 
     /** Nearest codebook entry per subspace (ties → lowest index). */
     def encode(v0: Array[Float]): Array[Byte] = {
@@ -738,6 +623,13 @@ object Quantize {
       }
       math.sqrt(acc)
     }
+    def code(r: Row, at: Int): Array[Byte] = r.getAs[Array[Byte]](at)
+    def prepare(q: Array[Float]): Array[Double] = adcTable(bindQuery(q))
+    def score(c: Array[Byte], p: Array[Double]): Double = adc(c, p)
+    /** Re-fit with the same subspace count, codebook size and metric (the
+      * default sample and iteration count). */
+    def retrain(df: DataFrame, vecCol: String, idCol: String): PqModel =
+      trainPq(df, vecCol, idCol, m = m, k = k, metric = metric)
   }
 
   /** Train per-subspace codebooks: deterministic sample (lowest `sample`
@@ -796,130 +688,96 @@ object Quantize {
     PqModel(books, metric, mNorm)
   }
 
-  /** Append `qCol: binary` with the M-byte PQ codes. */
-  def quantizePqTable(df: DataFrame, vecCol: String, qCol: String,
-                      m: PqModel): DataFrame = {
-    val schema = df.schema.add(StructField(qCol, BinaryType))
+  // ───── the lifecycle, one function per step over any Codec ─────
+
+  /** Append the codec's stored columns (`codeCol` first) to `df`. */
+  def quantizeTable(df: DataFrame, vecCol: String, codeCol: String,
+                    codec: Codec): DataFrame = {
+    val schema = codec.columns(codeCol).foldLeft(df.schema)(_ add _)
     val vecIdx = df.schema.fieldIndex(vecCol)
     df.mapPartitions { it =>
       it.map { r =>
         val v = r.getSeq[Float](vecIdx).toArray
-        Row.fromSeq(r.toSeq :+ m.encode(v))
+        Row.fromSeq(r.toSeq ++ codec.stored(codec.encode(v)))
       }
     }(Encoders.row(schema))
   }
 
-  /** Coarse candidates by ADC distance: the table is built ONCE per
-    * partition per query (M×K exact sub-distances), each row costs M
-    * lookups. Same declarative TakeOrdered sub-plan contract as
-    * [[coarseIds]]. */
-  def coarseIdsPq(qdf: DataFrame, qCol: String, idCol: String, m: PqModel,
-                  query: Array[Float], n: Int): DataFrame = {
-    import qdf.sparkSession.implicits._
-    val qB = qdf.sparkSession.sparkContext
-      .broadcast((m, m.bindQuery(query)))
-    qdf.select(col(idCol).cast("long").as("cid"), col(qCol))
-      .as[(Long, Array[Byte])]
+  /** The coarse-screen candidate ids: top-`n` by code distance — a
+    * declarative sub-plan (typed map + TakeOrdered), shared by
+    * [[searchRescore]] and [[graft.plans.AnnRoutingRule]]'s automatic
+    * quantized route (which splices it under the original Sort/Limit).
+    * `query` is RAW and travels in a broadcast, never in generated code;
+    * each partition prepares it once (the codec binds it into its screen
+    * space) and scores every row with one code read and one
+    * [[Codec.score]]. */
+  def coarseIds(qdf: DataFrame, codeCol: String, idCol: String, codec: Codec,
+                query: Array[Float], n: Int): DataFrame = {
+    val qB = qdf.sparkSession.sparkContext.broadcast((codec, query))
+    qdf.select(col(idCol).cast("long") +:
+        codec.columns(codeCol).map(f => col(f.name)): _*)
       .mapPartitions { it =>
-        val (mm, qv) = qB.value
-        val table = mm.adcTable(qv)
-        it.map { case (id, codes) => (id, mm.adc(codes, table)) }
-      }
+        val (c, q) = qB.value
+        val p = c.prepare(q)
+        it.map(r => (r.getLong(0), c.score(c.code(r, 1), p)))
+      }(Encoders.product[(Long, Double)])
       .toDF("cid", "adist")
       .orderBy(col("adist").asc, col("cid").asc)
       .limit(n)
       .select(col("cid").as(idCol))
   }
 
-  /** Top-k search: ADC coarse pass (k·refine survivors), exact rescore on
-    * the float vectors — same contract as [[searchRescore]]. */
-  def searchRescorePq(qdf: DataFrame, vecCol: String, qCol: String,
-                      idCol: String, m: PqModel, query: Array[Float], k: Int,
-                      metric: Knn.Metric = Knn.L2,
-                      refine: Int = 8): DataFrame = {
-    requireFlatMetric(m.metric, metric)
+  /** Top-k search: coarse pass on the codes (k·refine survivors), exact
+    * rescore on the float vectors with the codec's metric. Returns
+    * (idCol, dist) best-first, ties by id — same contract as [[Knn.knn]].
+    * `refine` ≤ 0 takes the codec's default. k·refine is formed in Long
+    * and clamped to Int.MaxValue: such a LIMIT plans as a full sort,
+    * never as a wrapped negative LIMIT. */
+  def searchRescore(qdf: DataFrame, vecCol: String, codeCol: String,
+                    idCol: String, codec: Codec, query: Array[Float], k: Int,
+                    refine: Int = 0): DataFrame = {
+    val keep = math.min(k.toLong * codec.refineOr(refine), Int.MaxValue)
     val survivors = qdf.join(
-      coarseIdsPq(qdf, qCol, idCol, m, query, k * refine), Seq(idCol))
-    Knn.knn(survivors, vecCol, idCol, query, k, metric)
+      coarseIds(qdf, codeCol, idCol, codec, query, keep.toInt), Seq(idCol))
+    Knn.knn(survivors, vecCol, idCol, query, k, codec.metric)
   }
 
-  private def appendRaw(encoded: DataFrame, quantPath: String): Unit = {
+  // ───── I9 for the quantized families: segment maintenance ─────
+  //
+  // The reference's RT flow trains a quantizer once and then encodes every
+  // incoming segment with it (builder train/add/save lifecycle,
+  // knn/knn.cpp:638-786; knn/knn.h:135-144) — OPTIMIZE may retrain. The
+  // Spark analog: a quantized table is an ordinary Parquet dir, so append =
+  // encode ONLY the new batch with the existing codec and add its files
+  // (the existing table is never touched — the 100 TB append cost is
+  // O(batch)); compact = re-sort to the canonical clustering and optionally
+  // re-fit the codec to the full corpus. Every coarse screen reads all
+  // files, so search is correct IMMEDIATELY after an append; the routed
+  // plan's cached relation is invalidated via the AnnRouting epoch.
+
+  /** Append `newRows` (base columns WITHOUT the code columns, same order
+    * as the quantized table) encoded with the EXISTING codec. */
+  def appendSegment(newRows: DataFrame, vecCol: String, codeCol: String,
+                    quantPath: String, codec: Codec): Unit = {
+    val encoded = quantizeTable(newRows, vecCol, codeCol, codec)
     encoded.write.mode("append").parquet(quantPath)
     graft.plans.AnnRouting.onIndexMutated(encoded.sparkSession, quantPath)
   }
 
-  /** Append `newRows` (base columns WITHOUT `qCol`, same order as the
-    * quantized table) encoded with the EXISTING int8 model. */
-  def appendSegment(newRows: DataFrame, vecCol: String, qCol: String,
-                    quantPath: String, m: QModel): Unit =
-    appendRaw(quantizeTable(newRows, vecCol, qCol, m), quantPath)
-
-  /** Append a new batch encoded with the EXISTING 4-bit model. */
-  def appendSegment4(newRows: DataFrame, vecCol: String, qCol: String,
-                     quantPath: String, m: Q4Model): Unit =
-    appendRaw(quantize4Table(newRows, vecCol, qCol, m), quantPath)
-
-  /** Append a new batch encoded with the EXISTING binary model. */
-  def appendSegmentBinary(newRows: DataFrame, vecCol: String, bCol: String,
-                          quantPath: String, m: BModel): Unit =
-    appendRaw(binarizeTable(newRows, vecCol, bCol, m), quantPath)
-
-  /** Append a new batch encoded with the EXISTING PQ codebooks. */
-  def appendSegmentPq(newRows: DataFrame, vecCol: String, qCol: String,
-                      quantPath: String, m: PqModel): Unit =
-    appendRaw(quantizePqTable(newRows, vecCol, qCol, m), quantPath)
-
   /** I9 OPTIMIZE for a quantized table: re-sort appended segments back to
-    * the canonical `sortBy` clustering and, with `retrain`, re-fit the
-    * model to the FULL corpus and re-encode (appended batches that drifted
-    * outside the trained min/max clamp until then — retraining restores
-    * the per-dim error bound). Swap is the rename-to-backup scheme of
-    * [[graft.index.SecondaryIndex.compact]]: the table exists at SOME path
-    * at every instant, and a crash between the renames leaves it intact at
-    * `<path>_old`. Returns the serving model — the caller re-registers the
-    * automatic route with it (the epoch bump already dropped the old
-    * entry). */
+    * the canonical `idCol` clustering and, with `retrain`, re-fit the
+    * codec to the FULL corpus and re-encode (appended batches that drifted
+    * outside the trained range clamp until then — retraining restores the
+    * per-dim error bound, re-centers binary thresholds, refreshes the IP
+    * bound M and the PQ codebooks). The swap is the rename-to-backup
+    * scheme of [[graft.index.SecondaryIndex.compact]]: the table exists at
+    * SOME path at every instant, and a crash between the renames leaves
+    * it intact at `<path>_old`. Returns the serving codec — the caller
+    * re-registers the automatic route with it (the epoch bump already
+    * dropped the old entry). */
   def compact(spark: org.apache.spark.sql.SparkSession, quantPath: String,
-              vecCol: String, qCol: String, sortBy: Seq[String],
-              m: QModel, retrain: Boolean = false): QModel =
-    compactImpl(spark, quantPath, qCol, sortBy) { base =>
-      // retrain preserves the serving metric (cosine retrains over the
-      // normalized companion, exactly like the original training)
-      val m2 = if (retrain) train(base, vecCol, m.metric) else m
-      (quantizeTable(base, vecCol, qCol, m2), m2)
-    }
-
-  /** [[compact]] for the 4-bit family (same swap + retrain semantics). */
-  def compact4(spark: org.apache.spark.sql.SparkSession, quantPath: String,
-               vecCol: String, qCol: String, sortBy: Seq[String],
-               m: Q4Model, retrain: Boolean = false): Q4Model =
-    compactImpl(spark, quantPath, qCol, sortBy) { base =>
-      val m2 = if (retrain) train4(base, vecCol, m.metric) else m
-      (quantize4Table(base, vecCol, qCol, m2), m2)
-    }
-
-  /** [[compact]] for the binary family (same swap + retrain semantics —
-    * retraining re-centers the per-dim sign thresholds on the full
-    * corpus's means, restoring screen selectivity after drifted appends). */
-  def compactBinary(spark: org.apache.spark.sql.SparkSession,
-                    quantPath: String, vecCol: String, bCol: String,
-                    sortBy: Seq[String], m: BModel,
-                    retrain: Boolean = false): BModel =
-    compactImpl(spark, quantPath, bCol, sortBy) { base =>
-      val m2 = if (retrain) trainBinary(base, vecCol, m.metric) else m
-      (binarizeTable(base, vecCol, bCol, m2), m2)
-    }
-
-  /** Shared rename-swap core of the three compacts: `reencode` maps the
-    * bare corpus (current table minus its code column) to the re-encoded
-    * table + serving model. The swap is the scheme of
-    * [[graft.index.SecondaryIndex.compact]]: the table exists at SOME path
-    * at every instant, and a crash between the renames leaves it intact
-    * at `<path>_old`. */
-  private def compactImpl[M](spark: org.apache.spark.sql.SparkSession,
-                             quantPath: String, qCol: String,
-                             sortBy: Seq[String])
-                            (reencode: DataFrame => (DataFrame, M)): M = {
+              vecCol: String, codeCol: String, idCol: String, codec: Codec,
+              retrain: Boolean = false): codec.Self = {
     val tmp = quantPath + "_compacting"
     val conf = spark.sparkContext.hadoopConfiguration
     val dst = new org.apache.hadoop.fs.Path(quantPath)
@@ -930,8 +788,12 @@ object Quantize {
     if (!fs.exists(dst) && fs.exists(bak) && !fs.rename(bak, dst))
       throw new java.io.IOException(
         s"table missing at $quantPath and backup restore from $bak failed")
-    val (encoded, m2) = reencode(spark.read.parquet(quantPath).drop(qCol))
-    graft.tables.Writer.write(encoded, tmp, sortBy = sortBy)
+    val base = spark.read.parquet(quantPath)
+      .drop(codec.columns(codeCol).map(_.name): _*)
+    val served: codec.Self =
+      if (retrain) codec.retrain(base, vecCol, idCol) else codec
+    graft.tables.Writer.write(quantizeTable(base, vecCol, codeCol, served),
+      tmp, sortBy = Seq(idCol))
     fs.delete(bak, true)
     if (!fs.rename(dst, bak))
       throw new java.io.IOException(s"could not back up $quantPath for swap")
@@ -944,16 +806,16 @@ object Quantize {
     }
     fs.delete(bak, true)
     graft.plans.AnnRouting.onIndexMutated(spark, quantPath)
-    m2
+    served
   }
 
-  // ───── Batch KNN JOIN for the flat quantized families (r15) ─────
+  // ───── Batch KNN JOIN over a quantized table (r15) ─────
   //
   // The batch form of the coarse-screen-then-rescore serving contract
   // (every query row gets its k nearest corpus rows in ONE plan, the
   // quantized analog of [[Knn.knnJoin]]): the query batch broadcasts,
-  // each corpus partition screens its CODE column against every query at
-  // the family's compact-bytes cost (M table lookups for PQ, XOR+popcount
+  // each corpus partition screens its CODE columns against every query at
+  // the codec's compact-bytes cost (M table lookups for PQ, XOR+popcount
   // for binary, dequantized L2 for the scalar codes — the float column is
   // never read by the screen), a per-(query, partition) bounded heap
   // keeps the k·refine best coarse survivors so the one shuffle carries
@@ -971,11 +833,18 @@ object Quantize {
     * (dist, id) with the root as the current worst kept: O(1) reject for
     * a row worse than the nth best (the common case once warm),
     * O(log n) insert. Deterministic: ties break toward the smaller id,
-    * the engine's knn convention. */
+    * the engine's knn convention. The arrays grow on demand, so a heap
+    * holds min(rows offered, cap) entries — a large k·refine costs memory
+    * only for the candidates a partition actually has. */
   private[vector] final class BoundedTopK(cap: Int) {
-    private val ds = new Array[Double](cap)
-    private val ids = new Array[Long](cap)
+    private var ds = new Array[Double](math.min(cap, 64))
+    private var ids = new Array[Long](math.min(cap, 64))
     private var n = 0
+    private def grow(): Unit = {
+      val len = math.min(cap.toLong, 2L * n).toInt
+      ds = java.util.Arrays.copyOf(ds, len)
+      ids = java.util.Arrays.copyOf(ids, len)
+    }
     private def worse(d1: Double, i1: Long, d2: Double, i2: Long): Boolean =
       d1 > d2 || (d1 == d2 && i1 > i2)
     private def swap(a: Int, b: Int): Unit = {
@@ -984,6 +853,7 @@ object Quantize {
     }
     def offer(d: Double, id: Long): Unit =
       if (n < cap) {
+        if (n == ds.length) grow()
         var i = n; ds(i) = d; ids(i) = id; n += 1
         while (i > 0 && worse(ds(i), ids(i), ds((i - 1) >> 1), ids((i - 1) >> 1))) {
           swap(i, (i - 1) >> 1); i = (i - 1) >> 1
@@ -1007,27 +877,28 @@ object Quantize {
     }
   }
 
-  /** Shared kernel of the four screened joins: `prep` turns a query
-    * vector into its screen-side state (ADC table / packed sign bits /
-    * the raw floats), `extract` pulls a row's code representation ONCE
-    * (hoisted out of the per-query loop), `score` is the family's coarse
-    * distance. All three are plain serializable closures over the model
-    * case classes. */
-  private def screenedJoin(qdf: DataFrame, vecCol: String, idCol: String,
-                           codeCols: Seq[String],
-                           queries: DataFrame, qIdCol: String,
-                           qVecCol: String, cIdCol: String, k: Int,
-                           metric: Knn.Metric, refine: Int, dim: Int,
-                           prep: Array[Float] => AnyRef,
-                           extract: Row => AnyRef,
-                           score: (AnyRef, AnyRef) => Double): DataFrame = {
+  /** Batch KNN JOIN over a quantized table ([[quantizeTable]] output:
+    * float column + the codec's code columns). Same exactness contract as
+    * [[searchRescore]] — the true top-k must sit in the global top
+    * k·refine coarse set; `refine` ≤ 0 takes the codec's default, and
+    * k·refine must fit an Int (each per-(query, partition) heap holds that
+    * many candidates). Returns (qIdCol, cIdCol, dist, rn), rn 1..k by
+    * (dist, id). */
+  def knnJoin(qdf: DataFrame, vecCol: String, codeCol: String,
+              idCol: String, codec: Codec,
+              queries: DataFrame, qIdCol: String, qVecCol: String,
+              cIdCol: String, k: Int, refine: Int = 0): DataFrame = {
     require(qIdCol != cIdCol,
       s"query and corpus id columns must have distinct names ($qIdCol)")
+    val r = codec.refineOr(refine)
+    require(k.toLong * r <= Int.MaxValue,
+      s"k·refine must fit an Int (one candidate heap per query holds that " +
+        s"many rows): k = $k, refine = $r")
     val spark = qdf.sparkSession
     import spark.implicits._
-    val keep = k * refine
-    val coded = qdf.select(
-      (col(idCol).cast("long") +: codeCols.map(col)): _*)
+    val keep = k * r
+    val coded = qdf.select(col(idCol).cast("long") +:
+      codec.columns(codeCol).map(f => col(f.name)): _*)
     // the one heap kernel both arms share: screen every corpus row of
     // `rows` against the query slice `qs`, emitting ≤ keep (qid, cid,
     // coarse-dist) rows per query — the per-(query, partition) bounded
@@ -1036,14 +907,15 @@ object Quantize {
         : Iterator[(Long, Long, Double)] =
       if (qs.isEmpty) Iterator.empty
       else {
-        val preps: Array[AnyRef] = qs.map(q => prep(q._2))
+        val preps = qs.map[AnyRef](q => codec.prepare(q._2))
         val heaps = Array.fill(qs.length)(new BoundedTopK(keep))
         rows.foreach { row =>
           val cid = row.getLong(0)
-          val code = extract(row)
+          val code = codec.code(row, 1)
           var j = 0
           while (j < qs.length) {
-            heaps(j).offer(score(code, preps(j)), cid)
+            heaps(j).offer(
+              codec.score(code, preps(j).asInstanceOf[codec.Prepared]), cid)
             j += 1
           }
         }
@@ -1060,7 +932,7 @@ object Quantize {
     def rescored(withQvec: DataFrame): DataFrame = {
       val scored = withQvec.join(rawSel, "__cid")
         .select(col("__qid"), col("__cid"),
-          Knn.distCol(metric, col("__cvec"), col("__qvec"))
+          Knn.distCol(codec.metric, col("__cvec"), col("__qvec"))
             .cast("double").as("__dist"))
       TopK.topKPairs(scored, qIdCol, cIdCol, k)
     }
@@ -1081,9 +953,9 @@ object Quantize {
     // distributed equi-join against the SAME persisted query projection
     // the slices were cut from (ADVICE r16: a nondeterministic query
     // source must feed the screen and the rescore identical rows).
-    // byte-aware row budget (r18): the model's dim sizes both the arm
+    // byte-aware row budget (r18): the codec's dim sizes both the arm
     // decision and the over-budget slice width
-    val max = Knn.maxQueryBatch(spark, dim)
+    val max = Knn.maxQueryBatch(spark, codec.dim)
     Knn.boundedQueryBatch(queries, qIdCol, qVecCol, max) match {
       case Some(qRows) =>
         val qB = spark.sparkContext.broadcast(qRows)
@@ -1110,114 +982,5 @@ object Quantize {
         val qDf = spark.createDataset(qRdd).toDF("__qid", "__qvec")
         rescored(globalCut(coarse).join(qDf, "__qid"))
     }
-  }
-
-  /** Batch KNN JOIN over an int8-quantized table ([[quantizeTable]]
-    * output: float column + `qCol` codes): the screen reads a quarter of
-    * the vector bytes. Same exactness contract as [[searchRescore]] —
-    * the true top-k must sit in the global top k·refine coarse set.
-    * Returns (qIdCol, cIdCol, dist, rn), rn 1..k by (dist, id). */
-  def knnJoinQuant(qdf: DataFrame, vecCol: String, qCol: String,
-                   idCol: String, m: QModel,
-                   queries: DataFrame, qIdCol: String, qVecCol: String,
-                   cIdCol: String, k: Int, metric: Knn.Metric = Knn.L2,
-                   refine: Int = 8): DataFrame = {
-    requireFlatMetric(m.metric, metric)
-    screenedJoin(qdf, vecCol, idCol, Seq(qCol), queries, qIdCol, qVecCol,
-      cIdCol, k, metric, refine, m.dim,
-      prep = q => m.bindQuery(q),
-      extract = r => r.getAs[Array[Byte]](1),
-      score = (c, p) =>
-        m.l2(c.asInstanceOf[Array[Byte]], p.asInstanceOf[Array[Float]]))
-  }
-
-  /** [[knnJoinQuant]] for the 4-bit family (packed nibbles, 8× smaller
-    * screen bytes; refine default matches [[searchRescore4]]'s). */
-  def knnJoinQuant4(qdf: DataFrame, vecCol: String, qCol: String,
-                    idCol: String, m: Q4Model,
-                    queries: DataFrame, qIdCol: String, qVecCol: String,
-                    cIdCol: String, k: Int, metric: Knn.Metric = Knn.L2,
-                    refine: Int = 12): DataFrame = {
-    requireFlatMetric(m.metric, metric)
-    screenedJoin(qdf, vecCol, idCol, Seq(qCol), queries, qIdCol, qVecCol,
-      cIdCol, k, metric, refine, m.dim,
-      prep = q => m.bindQuery(q),
-      extract = r => r.getAs[Array[Byte]](1),
-      score = (c, p) =>
-        m.l2(c.asInstanceOf[Array[Byte]], p.asInstanceOf[Array[Float]]))
-  }
-
-  /** [[knnJoinQuant]] for the binary family: Hamming screen over the
-    * packed sign bits, or — with `rCol` naming the stored residual-factor
-    * struct ([[binarizeTableResidual]]) — the magnitude-aware corrected
-    * estimate, which reaches equal exactness at a several-fold smaller
-    * refine (the [[coarseIdsBinaryResidual]] economics). The residual
-    * estimator is L2-family, so `rCol` requires the L2 metric. */
-  def knnJoinBinary(bdf: DataFrame, vecCol: String, bCol: String,
-                    idCol: String, m: BModel,
-                    queries: DataFrame, qIdCol: String, qVecCol: String,
-                    cIdCol: String, k: Int, metric: Knn.Metric = Knn.L2,
-                    refine: Int = 16,
-                    rCol: Option[String] = None): DataFrame = {
-    requireFlatMetric(m.metric, metric)
-    rCol match {
-      case None =>
-        screenedJoin(bdf, vecCol, idCol, Seq(bCol), queries, qIdCol,
-          qVecCol, cIdCol, k, metric, refine, m.dim,
-          prep = q => m.binarizeQuery(q), // query-side space binding
-          extract = r => r.getSeq[Long](1).toArray,
-          score = (c, p) => m.hamming(c.asInstanceOf[Array[Long]],
-            p.asInstanceOf[Array[Long]]).toDouble)
-      case Some(rc) =>
-        // the residual estimator is an L2² construction in the TRAINED
-        // space: raw for L2, normalized for cosine (where normalized-L2²
-        // order == cosine order) — requireFlatMetric above already pinned
-        // metric == m.metric
-        screenedJoin(bdf, vecCol, idCol,
-          Seq(bCol, s"$rc.norm", s"$rc.scale"), queries, qIdCol, qVecCol,
-          cIdCol, k, metric, refine, m.dim,
-          prep = q0 => {
-            val q = m.bindQuery(q0)
-            val qr = new Array[Double](m.dim)
-            var qn2 = 0.0
-            var sq = 0.0
-            var i = 0
-            while (i < m.dim) {
-              qr(i) = q(i).toDouble - m.thresholds(i)
-              qn2 += qr(i) * qr(i)
-              sq += qr(i)
-              i += 1
-            }
-            (qr, qn2, sq)
-          },
-          extract = r =>
-            (r.getSeq[Long](1).toArray, r.getFloat(2), r.getFloat(3)),
-          score = (c, p) => {
-            val (code, rn, rs) =
-              c.asInstanceOf[(Array[Long], Float, Float)]
-            val (qr, qn2, sq) =
-              p.asInstanceOf[(Array[Double], Double, Double)]
-            m.estimateL2(code, rn, rs, qr, qn2, sq)
-          })
-    }
-  }
-
-  /** [[knnJoinQuant]] for the PQ family: one M×K ADC table per query per
-    * partition, M byte-lookups per (row, query) — 32× fewer screen bytes
-    * than float32 at dim 64 / M 8. refine default matches the
-    * gate-measured contract of the automatic PQ route
-    * ([[graft.plans.AnnRouting.registerPq]]). */
-  def knnJoinPq(qdf: DataFrame, vecCol: String, qCol: String,
-                idCol: String, m: PqModel,
-                queries: DataFrame, qIdCol: String, qVecCol: String,
-                cIdCol: String, k: Int, metric: Knn.Metric = Knn.L2,
-                refine: Int = 32): DataFrame = {
-    requireFlatMetric(m.metric, metric)
-    screenedJoin(qdf, vecCol, idCol, Seq(qCol), queries, qIdCol, qVecCol,
-      cIdCol, k, metric, refine, m.dim,
-      prep = q => m.adcTable(m.bindQuery(q)),
-      extract = r => r.getAs[Array[Byte]](1),
-      score = (c, p) => m.adc(c.asInstanceOf[Array[Byte]],
-        p.asInstanceOf[Array[Double]]))
   }
 }

@@ -299,23 +299,14 @@ object VectorIndexCheck {
     Report(layersDir, rows, issues.toSeq)
   }
 
-  /** Shared quant-family pass: re-encode every stored vector with the
-    * model and require code equality, plus id uniqueness and optional
-    * fact reconciliation. `encode` returns None when the vector itself is
-    * un-encodable (wrong dim for the model). */
-  private def checkCodes(spark: SparkSession, path: String, qCol: String,
-                         idCol: String,
-                         mismatchIds: DataFrame => org.apache.spark.sql.Dataset[Long],
-                         fact: Option[(DataFrame, String)]): Report = {
+  /** The id passes every code-carrying table shares: id uniqueness and,
+    * with `fact`, reconciliation against the fact ids in both directions
+    * (`what` names the table in the messages). */
+  private def idIssues(spark: SparkSession, t: DataFrame, idCol: String,
+                       what: String,
+                       fact: Option[(DataFrame, String)]): Seq[String] = {
     import spark.implicits._
     val issues = scala.collection.mutable.ArrayBuffer.empty[String]
-    val t = spark.read.parquet(path)
-    val rows = t.count()
-    val bad = mismatchIds(t)
-    val bc = bad.count()
-    if (bc > 0)
-      issues += s"$bc stored $qCol codes disagree with the model re-encode: " +
-        s"ids ${sample(bad.take(SampleN))}"
     val dupIds = t.groupBy(col(idCol)).count().filter(col("count") > 1)
       .select(col(idCol).cast("long")).as[Long]
     val dupc = dupIds.count()
@@ -327,13 +318,15 @@ object VectorIndexCheck {
       val missing = fids.join(tids, Seq("__fid"), "left_anti").as[Long]
       val mc = missing.count()
       if (mc > 0)
-        issues += s"$mc fact ids missing from the quantized table: ${sample(missing.take(SampleN))}"
+        issues += s"$mc fact ids missing from the $what: " +
+          s"${sample(missing.take(SampleN))}"
       val extra = tids.join(fids, Seq("__fid"), "left_anti").as[Long]
       val ec = extra.count()
       if (ec > 0)
-        issues += s"$ec quantized-table ids absent from the fact table: ${sample(extra.take(SampleN))}"
+        issues += s"$ec $what ids absent from the fact table: " +
+          s"${sample(extra.take(SampleN))}"
     }
-    Report(path, rows, issues.toSeq)
+    issues.toSeq
   }
 
   /** IVF family ([[Ivf.buildIndex]] layout): every stored `ivf_cluster`
@@ -371,80 +364,47 @@ object VectorIndexCheck {
     if (dc > 0)
       issues += s"$dc stored ivf_cluster assignments disagree with the " +
         s"model re-assign: ids ${sample(drift.take(SampleN))}"
-    val dupIds = t.groupBy(col(idCol)).count().filter(col("count") > 1)
-      .select(col(idCol).cast("long")).as[Long]
-    val dupc = dupIds.count()
-    if (dupc > 0)
-      issues += s"$dupc duplicate $idCol values: ${sample(dupIds.take(SampleN))}"
-    fact.foreach { case (f, fid) =>
-      val fids = f.select(col(fid).cast("long").as("__fid"))
-      val tids = t.select(col(idCol).cast("long").as("__fid"))
-      val missing = fids.join(tids, Seq("__fid"), "left_anti").as[Long]
-      val mc = missing.count()
-      if (mc > 0)
-        issues += s"$mc fact ids missing from the IVF index: " +
-          s"${sample(missing.take(SampleN))}"
-      val extra = tids.join(fids, Seq("__fid"), "left_anti").as[Long]
-      val ec = extra.count()
-      if (ec > 0)
-        issues += s"$ec IVF-index ids absent from the fact table: " +
-          s"${sample(extra.take(SampleN))}"
-    }
-    Report(live, rows, issues.toSeq)
+    Report(live, rows,
+      issues.toSeq ++ idIssues(spark, t, idCol, "IVF index", fact))
   }
 
-  /** int8 family ([[Quantize.quantizeTable]]). */
+  /** Flat quantized table ([[Quantize.quantizeTable]] layout, any
+    * [[Quantize.Codec]]): every stored code column — PQ codes and the
+    * residual-binary factors included — must equal the codec's re-encode
+    * of the stored float vector (subsumes "codes decode within model
+    * bounds": a clamped re-encode IS the canonical code; any drift — bit
+    * rot, a stale model after retrain-compact, a truncated row — shows as
+    * inequality). A NULL vector or one whose width is not the codec's raw
+    * dimension (an IP codec's code dim is the augmented dim+1) counts as a
+    * mismatch. Plus id uniqueness and optional fact reconciliation. */
   def checkQuant(spark: SparkSession, path: String, vecCol: String,
-                 qCol: String, idCol: String, m: Quantize.QModel,
-                 fact: Option[(DataFrame, String)] = None): Report =
-    checkCodes(spark, path, qCol, idCol, { t =>
-      import spark.implicits._
-      val mb = spark.sparkContext.broadcast(m)
-      t.select(col(idCol).cast("long"), col(vecCol), col(qCol))
-        .as[(Long, Seq[Float], Array[Byte])]
-        .flatMap { case (id, v, codes) =>
-          val mm = mb.value
-          // an IP model's code dim is the AUGMENTED dim+1; stored rows
-          // stay raw-width (rawDim)
-          val ok = v.length == mm.rawDim(mm.dim) &&
-            java.util.Arrays.equals(codes, mm.quantize(v.toArray))
-          if (ok) None else Some(id)
-        }
-    }, fact)
-
-  /** 4-bit family ([[Quantize.quantize4Table]]). */
-  def checkQuant4(spark: SparkSession, path: String, vecCol: String,
-                  qCol: String, idCol: String, m: Quantize.Q4Model,
-                  fact: Option[(DataFrame, String)] = None): Report =
-    checkCodes(spark, path, qCol, idCol, { t =>
-      import spark.implicits._
-      val mb = spark.sparkContext.broadcast(m)
-      t.select(col(idCol).cast("long"), col(vecCol), col(qCol))
-        .as[(Long, Seq[Float], Array[Byte])]
-        .flatMap { case (id, v, codes) =>
-          val mm = mb.value
-          // an IP model's code dim is the AUGMENTED dim+1; stored rows
-          // stay raw-width (rawDim)
-          val ok = v.length == mm.rawDim(mm.dim) &&
-            java.util.Arrays.equals(codes, mm.quantize(v.toArray))
-          if (ok) None else Some(id)
-        }
-    }, fact)
-
-  /** Binary family ([[Quantize.binarizeTable]]). */
-  def checkBinary(spark: SparkSession, path: String, vecCol: String,
-                  bCol: String, idCol: String, m: Quantize.BModel,
-                  fact: Option[(DataFrame, String)] = None): Report =
-    checkCodes(spark, path, bCol, idCol, { t =>
-      import spark.implicits._
-      val mb = spark.sparkContext.broadcast(m)
-      t.select(col(idCol).cast("long"), col(vecCol), col(bCol))
-        .as[(Long, Seq[Float], Seq[Long])]
-        .flatMap { case (id, v, words) =>
-          val mm = mb.value
-          val ok = v.length == mm.rawDim(mm.dim) &&
-            words == mm.binarize(v.toArray).toSeq
-          if (ok) None else Some(id)
-        }
-    }, fact)
+                 codeCol: String, idCol: String, codec: Quantize.Codec,
+                 fact: Option[(DataFrame, String)] = None): Report = {
+    import spark.implicits._
+    val t = spark.read.parquet(path)
+    val rows = t.count()
+    val cb = spark.sparkContext.broadcast(codec)
+    val bad = t.select(col(idCol).cast("long") +: col(vecCol) +:
+        codec.columns(codeCol).map(f => col(f.name)): _*)
+      .flatMap { r =>
+        val c = cb.value
+        val v = if (r.isNullAt(1)) null else r.getSeq[Float](1)
+        val ok = v != null && v.length == c.rawDim &&
+          c.stored(c.encode(v.toArray)).zipWithIndex.forall {
+            case (x: Array[Byte], i) => r.get(2 + i) match {
+              case y: Array[Byte] => java.util.Arrays.equals(x, y)
+              case _ => false
+            }
+            case (x, i) => x == r.get(2 + i)
+          }
+        if (ok) None else Some(r.getLong(0))
+      }
+    val bc = bad.count()
+    val mismatch =
+      if (bc == 0) Nil
+      else Seq(s"$bc stored $codeCol codes disagree with the model " +
+        s"re-encode: ids ${sample(bad.take(SampleN))}")
+    Report(path, rows,
+      mismatch ++ idIssues(spark, t, idCol, "quantized table", fact))
+  }
 }

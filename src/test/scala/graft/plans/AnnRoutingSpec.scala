@@ -424,34 +424,34 @@ class AnnRoutingSpec extends AnyFunSuite {
     // refine is QuantizeSpec's subject
     val q4 = tmp.resolve("q4").toString
     val m4 = graft.vector.Quantize.train4(df, "embedding")
-    Writer.write(graft.vector.Quantize.quantize4Table(
+    Writer.write(graft.vector.Quantize.quantizeTable(
       df, "embedding", "q4vec", m4), q4, sortBy = Seq("vec_id"))
-    AnnRouting.registerQuant4(SparkT.spark, q4, q4, m4,
-      vecCol = "embedding", idCol = "vec_id", refine = 40)
+    AnnRouting.registerQuant(SparkT.spark, q4, q4, m4,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "q4vec", refine = 40)
     val r4 = Knn.knn(SparkT.spark.read.parquet(q4),
       "embedding", "vec_id", query, 10)
     assert(joins(r4).nonEmpty, r4.queryExecution.optimizedPlan.toString)
     assert(r4.select("vec_id").as[Long].collect().toSeq === exactTop10)
     val qb = tmp.resolve("qb").toString
     val mb = graft.vector.Quantize.trainBinary(df, "embedding")
-    Writer.write(graft.vector.Quantize.binarizeTable(
+    Writer.write(graft.vector.Quantize.quantizeTable(
       df, "embedding", "bvec", mb), qb, sortBy = Seq("vec_id"))
-    AnnRouting.registerBinary(SparkT.spark, qb, qb, mb,
-      vecCol = "embedding", idCol = "vec_id", refine = 40)
+    AnnRouting.registerQuant(SparkT.spark, qb, qb, mb,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "bvec", refine = 40)
     val rb = Knn.knn(SparkT.spark.read.parquet(qb),
       "embedding", "vec_id", query, 10)
     assert(joins(rb).nonEmpty, rb.queryExecution.optimizedPlan.toString)
     assert(rb.select("vec_id").as[Long].collect().toSeq === exactTop10)
-    // RESIDUAL-factor binary (r13): the rCol registration must actually
+    // RESIDUAL-factor binary (r13): the residual codec registration must actually
     // FIRE the route (splice join present — the gate's fullscan oracle
     // would stay green even if routing silently stood down) and stay
     // exact through the corrected screen + rescore
     val qbr = tmp.resolve("qbr").toString
-    Writer.write(graft.vector.Quantize.binarizeTableResidual(
-      df, "embedding", "bvec", "bres", mb), qbr, sortBy = Seq("vec_id"))
-    AnnRouting.registerBinary(SparkT.spark, qbr, qbr, mb,
-      vecCol = "embedding", idCol = "vec_id", refine = 40,
-      rCol = Some("bres"))
+    val res = graft.vector.Quantize.BResidual(mb)
+    Writer.write(graft.vector.Quantize.quantizeTable(
+      df, "embedding", "bvec", res), qbr, sortBy = Seq("vec_id"))
+    AnnRouting.registerQuant(SparkT.spark, qbr, qbr, res,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "bvec", refine = 40)
     val rbr = Knn.knn(SparkT.spark.read.parquet(qbr),
       "embedding", "vec_id", query, 10)
     assert(joins(rbr).nonEmpty, rbr.queryExecution.optimizedPlan.toString)
@@ -462,12 +462,12 @@ class AnnRoutingSpec extends AnyFunSuite {
     // re-registers — then the route serves the appended corpus too
     val extra = Seq((9001L, Array.fill(dim)(99f), 0))
       .toDF("vec_id", "embedding", "label")
-    graft.vector.Quantize.appendSegment4(extra, "embedding", "q4vec", q4, m4)
+    graft.vector.Quantize.appendSegment(extra, "embedding", "q4vec", q4, m4)
     val dropped = Knn.knn(SparkT.spark.read.parquet(q4),
       "embedding", "vec_id", query, 10)
     assert(joins(dropped).isEmpty, "stale entry must drop after append")
-    AnnRouting.registerQuant4(SparkT.spark, q4, q4, m4,
-      vecCol = "embedding", idCol = "vec_id", refine = 41)
+    AnnRouting.registerQuant(SparkT.spark, q4, q4, m4,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "q4vec", refine = 41)
     val rerouted = Knn.knn(SparkT.spark.read.parquet(q4),
       "embedding", "vec_id", query, 10)
     assert(joins(rerouted).nonEmpty)
@@ -485,13 +485,13 @@ class AnnRoutingSpec extends AnyFunSuite {
     val pq = tmp.resolve("pq").toString
     val mpq = graft.vector.Quantize.trainPq(df, "embedding", "vec_id",
       m = 4, k = 16)
-    Writer.write(graft.vector.Quantize.quantizePqTable(
+    Writer.write(graft.vector.Quantize.quantizeTable(
       df, "embedding", "pqvec", mpq), pq, sortBy = Seq("vec_id"))
     // refine sized past the fixture's row count: exactness is structural
     // (the screen passes every row); screen economy at honest refine is
     // QuantizeSpec's subject — same convention as the 4-bit/binary pins
-    AnnRouting.registerPq(SparkT.spark, pq, pq, mpq,
-      vecCol = "embedding", idCol = "vec_id", refine = 40)
+    AnnRouting.registerQuant(SparkT.spark, pq, pq, mpq,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "pqvec", refine = 40)
     val rp = Knn.knn(SparkT.spark.read.parquet(pq),
       "embedding", "vec_id", query, 10)
     assert(joins(rp).nonEmpty, rp.queryExecution.optimizedPlan.toString)
@@ -507,12 +507,12 @@ class AnnRoutingSpec extends AnyFunSuite {
     // until re-registration serves the appended corpus
     val extra = Seq((9002L, Array.fill(dim)(98f), 0))
       .toDF("vec_id", "embedding", "label")
-    graft.vector.Quantize.appendSegmentPq(extra, "embedding", "pqvec", pq, mpq)
+    graft.vector.Quantize.appendSegment(extra, "embedding", "pqvec", pq, mpq)
     val dropped = Knn.knn(SparkT.spark.read.parquet(pq),
       "embedding", "vec_id", query, 10)
     assert(joins(dropped).isEmpty, "stale PQ entry must drop after append")
-    AnnRouting.registerPq(SparkT.spark, pq, pq, mpq,
-      vecCol = "embedding", idCol = "vec_id", refine = 41)
+    AnnRouting.registerQuant(SparkT.spark, pq, pq, mpq,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "pqvec", refine = 41)
     val rerouted = Knn.knn(SparkT.spark.read.parquet(pq),
       "embedding", "vec_id", query, 10)
     assert(joins(rerouted).nonEmpty)
@@ -841,7 +841,7 @@ class AnnRoutingSpec extends AnyFunSuite {
     assert(rows(served) === exact(Knn.IP), "routed IP join != exact IP")
     // mismatched metric (cosine requested of the IP registration): the
     // join takes the exact fullscan fallback — no code read, cosine-exact
-    // (pre-r20 this CRASHED in requireFlatMetric)
+    // (pre-r20 this crashed on the model-vs-serving metric check)
     val fell = AnnRouting.knnJoin(SparkT.spark, qt, "embedding", "vec_id",
       queriesDf, "query_id", "embedding", "corpus_id", 4, Knn.Cosine)
     assert(!readsCodes(fell), "mismatched-metric join touched the codes")
@@ -901,18 +901,18 @@ class AnnRoutingSpec extends AnyFunSuite {
     // binary residual cosine model: same dispatch contract
     val bt = tmp.resolve("bcos").toString
     val mb = Quantize.trainBinary(df, "embedding", Knn.Cosine)
-    Writer.write(Quantize.binarizeTableResidual(df, "embedding", "bvec",
-      "rfac", mb), bt, sortBy = Seq("vec_id"))
-    AnnRouting.registerBinary(SparkT.spark, bt, bt, mb,
-      vecCol = "embedding", idCol = "vec_id", refine = 48,
-      rCol = Some("rfac"))
+    val res = Quantize.BResidual(mb, "rfac")
+    Writer.write(Quantize.quantizeTable(df, "embedding", "bvec", res), bt,
+      sortBy = Seq("vec_id"))
+    AnnRouting.registerQuant(SparkT.spark, bt, bt, res,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "bvec", refine = 48)
     val routedB = Knn.knn(SparkT.spark.read.parquet(bt),
       "embedding", "vec_id", query, 10, Knn.Cosine)
     assert(joins(routedB).nonEmpty)
     assert(routedB.select("vec_id").as[Long].collect().toSeq === wantCos)
     AnnRouting.unregister(SparkT.spark, bt)
     // the L2-model registration (the shared r10 fixture behavior) keeps
-    // refusing cosine keys — familyMetric now reads the model
+    // refusing cosine keys — the family metric is the codec's
     val qtL2 = tmp.resolve("ql2").toString
     val mL2 = Quantize.train(df, "embedding")
     Writer.write(Quantize.quantizeTable(df, "embedding", "qvec", mL2),

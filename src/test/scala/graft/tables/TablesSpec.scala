@@ -141,4 +141,16 @@ class TablesSpec extends AnyFunSuite {
       assert(rep.ok, rep.issues.mkString("; "))
     } finally System.clearProperty("graft.derived.root")
   }
+
+  test("derived paths of two scale dirs sharing a basename are distinct") {
+    val root = tmpDir()
+    val a = root.resolve("a").resolve("sf1").toString
+    val b = root.resolve("b").resolve("sf1").toString
+    assert(Derived.path(a, "quant_embeddings") !=
+      Derived.path(b, "quant_embeddings"))
+    // one dir spelled two ways keys to one path
+    assert(Derived.path(a, "quant_embeddings") ===
+      Derived.path(a + "/.", "quant_embeddings"))
+    assert(Derived.path(a, "quant_embeddings").startsWith(Derived.root))
+  }
 }

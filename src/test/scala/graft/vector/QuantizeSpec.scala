@@ -1,6 +1,7 @@
 package graft.vector
 
 import graft.SparkT
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** int8 quantization: bounded reconstruction error, exact-match rescoring
@@ -53,18 +54,19 @@ class QuantizeSpec extends AnyFunSuite {
 
   test("hamming screen + rescore equals the exact fullscan top-k on the fixture") {
     val m = Quantize.trainBinary(emb, "embedding")
-    val bdf = Quantize.binarizeTable(emb, "embedding", "bvec", m)
+    val bdf = Quantize.quantizeTable(emb, "embedding", "bvec", m)
     val q = emb.where($"vec_id" === 0).select("embedding").as[Seq[Float]].head().toArray
     val exact = Knn.knn(emb, "embedding", "vec_id", q, 10)
       .select("vec_id").as[Long].collect().toSeq
-    val bin = Quantize.searchHammingRescore(bdf, "embedding", "bvec", "vec_id", m, q, 10)
+    val bin = Quantize.searchRescore(bdf, "embedding", "bvec", "vec_id", m, q, 10)
       .select("vec_id").as[Long].collect().toSeq
     assert(bin === exact)
   }
 
   test("residual-corrected screen is exact with fewer rescored candidates than raw Hamming") {
     val m = Quantize.trainBinary(emb, "embedding")
-    val bdf = Quantize.binarizeTableResidual(emb, "embedding", "bvec", "bres", m)
+    val bdf = Quantize.quantizeTable(emb, "embedding", "bvec",
+      Quantize.BResidual(m))
       .cache()
     val queries = emb.filter($"vec_id" < 8)
       .select($"vec_id", $"embedding").as[(Long, Seq[Float])].collect()
@@ -79,10 +81,11 @@ class QuantizeSpec extends AnyFunSuite {
         df.select("vec_id").as[Long].collect().toSeq
       def minOk(run: Int => Seq[Long]) =
         refines.find(r => run(r) == exact).getOrElse(2 * refines.last)
-      hammingTotal += minOk(r => ids(Quantize.searchHammingRescore(
+      hammingTotal += minOk(r => ids(Quantize.searchRescore(
         bdf, "embedding", "bvec", "vec_id", m, q, 10, refine = r)))
-      residualTotal += minOk(r => ids(Quantize.searchHammingRescoreResidual(
-        bdf, "embedding", "bvec", "bres", "vec_id", m, q, 10, refine = r)))
+      residualTotal += minOk(r => ids(Quantize.searchRescore(
+        bdf, "embedding", "bvec", "vec_id", Quantize.BResidual(m), q, 10,
+        refine = r)))
     }
     // equal exactness, strictly smaller total candidate multiple
     assert(residualTotal < hammingTotal,
@@ -117,11 +120,11 @@ class QuantizeSpec extends AnyFunSuite {
 
   test("4-bit coarse+rescore equals the exact fullscan top-k on the fixture") {
     val m = Quantize.train4(emb, "embedding")
-    val qdf = Quantize.quantize4Table(emb, "embedding", "q4vec", m)
+    val qdf = Quantize.quantizeTable(emb, "embedding", "q4vec", m)
     val q = emb.where($"vec_id" === 0).select("embedding").as[Seq[Float]].head().toArray
     val exact = Knn.knn(emb, "embedding", "vec_id", q, 10)
       .select("vec_id").as[Long].collect().toSeq
-    val q4 = Quantize.searchRescore4(qdf, "embedding", "q4vec", "vec_id", m, q, 10)
+    val q4 = Quantize.searchRescore(qdf, "embedding", "q4vec", "vec_id", m, q, 10)
       .select("vec_id").as[Long].collect().toSeq
     assert(q4 === exact)
   }
@@ -158,7 +161,7 @@ class QuantizeSpec extends AnyFunSuite {
     // OPTIMIZE with retrain: the model refits the FULL corpus (min/max now
     // cover the appended rows — the per-dim error bound is restored)
     val m2 = Quantize.compact(SparkT.spark, path, "embedding", "qvec",
-      Seq("vec_id"), m, retrain = true)
+      "vec_id", m, retrain = true)
     val full = Quantize.train(emb, "embedding")
     assert(m2.mins.toSeq === full.mins.toSeq)
     assert(m2.maxs.toSeq === full.maxs.toSeq)
@@ -168,56 +171,54 @@ class QuantizeSpec extends AnyFunSuite {
     assert(post === exact)
   }
 
-  test("4-bit and binary families: append with frozen model, compact retrains (I9 r12)") {
+  test("every codec: append with the frozen codec stays exact; compact(retrain) re-fits and checks clean (I9)") {
     val q = emb.where($"vec_id" === 0).select("embedding").as[Seq[Float]]
       .head().toArray
     val exact = Knn.knn(emb, "embedding", "vec_id", q, 10)
       .select("vec_id").as[Long].collect().toSeq
     val build = emb.filter($"vec_id" % 10 =!= 7)
     val later = emb.filter($"vec_id" % 10 === 7)
-
-    // 4-bit: build(90%) → appendSegment4 → compact4(retrain)
-    val p4 = java.nio.file.Files.createTempDirectory("graft-q4seg")
-      .resolve("q4t").toString
-    val m4 = Quantize.train4(build, "embedding")
-    graft.tables.Writer.write(
-      Quantize.quantize4Table(build, "embedding", "q4vec", m4), p4,
-      sortBy = Seq("vec_id"))
-    Quantize.appendSegment4(later, "embedding", "q4vec", p4, m4)
-    val mid4 = Quantize.searchRescore4(SparkT.spark.read.parquet(p4),
-        "embedding", "q4vec", "vec_id", m4, q, 10, refine = 24)
-      .select("vec_id").as[Long].collect().toSeq
-    assert(mid4 === exact)
-    val m4b = Quantize.compact4(SparkT.spark, p4, "embedding", "q4vec",
-      Seq("vec_id"), m4, retrain = true)
-    val full4 = Quantize.train4(emb, "embedding")
-    assert(m4b.mins.toSeq === full4.mins.toSeq)
-    assert(m4b.maxs.toSeq === full4.maxs.toSeq)
-    val post4 = Quantize.searchRescore4(SparkT.spark.read.parquet(p4),
-        "embedding", "q4vec", "vec_id", m4b, q, 10)
-      .select("vec_id").as[Long].collect().toSeq
-    assert(post4 === exact)
-
-    // binary: build(90%) → appendSegmentBinary → compactBinary(retrain)
-    val pb = java.nio.file.Files.createTempDirectory("graft-qbseg")
-      .resolve("qbt").toString
-    val mb = Quantize.trainBinary(build, "embedding")
-    graft.tables.Writer.write(
-      Quantize.binarizeTable(build, "embedding", "bvec", mb), pb,
-      sortBy = Seq("vec_id"))
-    Quantize.appendSegmentBinary(later, "embedding", "bvec", pb, mb)
-    val midB = Quantize.searchHammingRescore(SparkT.spark.read.parquet(pb),
-        "embedding", "bvec", "vec_id", mb, q, 10, refine = 32)
-      .select("vec_id").as[Long].collect().toSeq
-    assert(midB === exact)
-    val mbb = Quantize.compactBinary(SparkT.spark, pb, "embedding", "bvec",
-      Seq("vec_id"), mb, retrain = true)
-    val fullB = Quantize.trainBinary(emb, "embedding")
-    assert(mbb.thresholds.toSeq === fullB.thresholds.toSeq)
-    val postB = Quantize.searchHammingRescore(SparkT.spark.read.parquet(pb),
-        "embedding", "bvec", "vec_id", mbb, q, 10, refine = 32)
-      .select("vec_id").as[Long].collect().toSeq
-    assert(postB === exact)
+    // a codec's trained parameters: a re-fit must equal a fresh train on
+    // the full corpus
+    def params(c: Quantize.Codec): Seq[Float] = c match {
+      case m: Quantize.QModel => m.mins.toSeq ++ m.maxs
+      case m: Quantize.Q4Model => m.mins.toSeq ++ m.maxs
+      case m: Quantize.PqModel => m.codebooks.flatten.flatten.toSeq
+      case m: Quantize.BModel => m.thresholds.toSeq
+      case r: Quantize.BResidual => params(r.model)
+    }
+    // (label, code column, trainer, refine while appended codes may clamp,
+    // refine after the retraining compact; 0 = the codec's default)
+    val codecs: Seq[(String, String, DataFrame => Quantize.Codec, Int, Int)] =
+      Seq(
+        ("int8", "qvec", Quantize.train(_, "embedding"), 16, 0),
+        ("4-bit", "q4vec", Quantize.train4(_, "embedding"), 24, 0),
+        ("pq", "pqvec", Quantize.trainPq(_, "embedding", "vec_id"), 32, 0),
+        ("binary", "bvec", Quantize.trainBinary(_, "embedding"), 32, 32),
+        ("binary residual", "bvec",
+          df => Quantize.BResidual(Quantize.trainBinary(df, "embedding")),
+          32, 32))
+    codecs.foreach { case (label, codeCol, train, midRefine, postRefine) =>
+      val path = java.nio.file.Files.createTempDirectory("graft-codecseg")
+        .resolve("t").toString
+      val c = train(build)
+      graft.tables.Writer.write(
+        Quantize.quantizeTable(build, "embedding", codeCol, c), path,
+        sortBy = Seq("vec_id"))
+      Quantize.appendSegment(later, "embedding", codeCol, path, c)
+      def search(c: Quantize.Codec, refine: Int): Seq[Long] =
+        Quantize.searchRescore(SparkT.spark.read.parquet(path), "embedding",
+            codeCol, "vec_id", c, q, 10, refine = refine)
+          .select("vec_id").as[Long].collect().toSeq
+      assert(search(c, midRefine) === exact, s"$label appended")
+      val c2 = Quantize.compact(SparkT.spark, path, "embedding", codeCol,
+        "vec_id", c, retrain = true)
+      assert(params(c2) === params(train(emb)), s"$label re-fit")
+      assert(search(c2, postRefine) === exact, s"$label compacted")
+      val report = VectorIndexCheck.checkQuant(SparkT.spark, path,
+        "embedding", codeCol, "vec_id", c2, fact = Some((emb, "vec_id")))
+      assert(report.ok, s"$label: ${report.issues.mkString("; ")}")
+    }
   }
 
   test("zero-range dimensions quantize without dividing by zero") {
@@ -255,11 +256,11 @@ class QuantizeSpec extends AnyFunSuite {
 
   test("PQ: ADC screen + rescore equals the exact fullscan top-k on the fixture") {
     val m = Quantize.trainPq(emb, "embedding", "vec_id")
-    val qdf = Quantize.quantizePqTable(emb, "embedding", "pqvec", m)
+    val qdf = Quantize.quantizeTable(emb, "embedding", "pqvec", m)
     val q = emb.where($"vec_id" === 0).select("embedding").as[Seq[Float]].head().toArray
     val exact = Knn.knn(emb, "embedding", "vec_id", q, 10)
       .select("vec_id").as[Long].collect().toSeq
-    val pq = Quantize.searchRescorePq(qdf, "embedding", "pqvec", "vec_id",
+    val pq = Quantize.searchRescore(qdf, "embedding", "pqvec", "vec_id",
         m, q, 10, refine = 32)
       .select("vec_id").as[Long].collect().toSeq
     assert(pq === exact)
@@ -270,12 +271,12 @@ class QuantizeSpec extends AnyFunSuite {
     val build = emb.where($"vec_id" % 10 =!= 9L)
     val append = emb.where($"vec_id" % 10 === 9L)
     val m = Quantize.trainPq(build, "embedding", "vec_id")
-    Quantize.quantizePqTable(build, "embedding", "pqvec", m)
+    Quantize.quantizeTable(build, "embedding", "pqvec", m)
       .write.parquet(dir)
-    Quantize.appendSegmentPq(append, "embedding", "pqvec", dir, m)
+    Quantize.appendSegment(append, "embedding", "pqvec", dir, m)
     val q = emb.where($"vec_id" === 9L).select("embedding").as[Seq[Float]]
       .head().toArray
-    val got = Quantize.searchRescorePq(SparkT.spark.read.parquet(dir),
+    val got = Quantize.searchRescore(SparkT.spark.read.parquet(dir),
         "embedding", "pqvec", "vec_id", m, q, 10, refine = 32)
       .select("vec_id").as[Long].collect().toSeq
     val exact = Knn.knn(emb, "embedding", "vec_id", q, 10)
@@ -300,35 +301,35 @@ class QuantizeSpec extends AnyFunSuite {
     }
     val m8 = Quantize.train(corpus, "embedding")
     val q8 = Quantize.quantizeTable(corpus, "embedding", "qvec", m8)
-    run(Quantize.knnJoinQuant(q8, "embedding", "qvec", "vec_id", m8,
+    run(Quantize.knnJoin(q8, "embedding", "qvec", "vec_id", m8,
       queriesDf, "query_id", "embedding", "corpus_id", 5, refine = 32),
       "int8")
     // partition invariance of the kernel: heaps cut per partition, the
     // global cut and id tiebreaks make the result layout-independent
-    run(Quantize.knnJoinQuant(q8.repartition(7), "embedding", "qvec",
+    run(Quantize.knnJoin(q8.repartition(7), "embedding", "qvec",
       "vec_id", m8, queriesDf, "query_id", "embedding", "corpus_id", 5,
       refine = 32), "int8 repartitioned")
     val m4 = Quantize.train4(corpus, "embedding")
-    val q4 = Quantize.quantize4Table(corpus, "embedding", "q4vec", m4)
-    run(Quantize.knnJoinQuant4(q4, "embedding", "q4vec", "vec_id", m4,
+    val q4 = Quantize.quantizeTable(corpus, "embedding", "q4vec", m4)
+    run(Quantize.knnJoin(q4, "embedding", "q4vec", "vec_id", m4,
       queriesDf, "query_id", "embedding", "corpus_id", 5, refine = 48),
       "4-bit")
     val mb = Quantize.trainBinary(corpus, "embedding")
-    val bdf = Quantize.binarizeTable(corpus, "embedding", "bvec", mb)
-    run(Quantize.knnJoinBinary(bdf, "embedding", "bvec", "vec_id", mb,
+    val bdf = Quantize.quantizeTable(corpus, "embedding", "bvec", mb)
+    run(Quantize.knnJoin(bdf, "embedding", "bvec", "vec_id", mb,
       queriesDf, "query_id", "embedding", "corpus_id", 5, refine = 96),
       "binary hamming")
-    val rdf = Quantize.binarizeTableResidual(corpus, "embedding", "bvec",
-      "rfac", mb)
-    run(Quantize.knnJoinBinary(rdf, "embedding", "bvec", "vec_id", mb,
-      queriesDf, "query_id", "embedding", "corpus_id", 5, refine = 32,
-      rCol = Some("rfac")), "binary residual")
+    val rdf = Quantize.quantizeTable(corpus, "embedding", "bvec",
+      Quantize.BResidual(mb, "rfac"))
+    run(Quantize.knnJoin(rdf, "embedding", "bvec", "vec_id",
+      Quantize.BResidual(mb, "rfac"), queriesDf, "query_id", "embedding",
+      "corpus_id", 5, refine = 32), "binary residual")
     val mpq = Quantize.trainPq(corpus, "embedding", "vec_id")
-    val qpq = Quantize.quantizePqTable(corpus, "embedding", "pqvec", mpq)
+    val qpq = Quantize.quantizeTable(corpus, "embedding", "pqvec", mpq)
     // PQ's ADC ranking is the coarsest of the four — at refine=32 a few
     // true top-5 members fall outside the 160-candidate coarse set on
     // this fixture, so its exactness threshold sits higher
-    run(Quantize.knnJoinPq(qpq, "embedding", "pqvec", "vec_id", mpq,
+    run(Quantize.knnJoin(qpq, "embedding", "pqvec", "vec_id", mpq,
       queriesDf, "query_id", "embedding", "corpus_id", 5, refine = 64),
       "pq")
   }
@@ -346,30 +347,30 @@ class QuantizeSpec extends AnyFunSuite {
     val m8 = Quantize.train(emb, "embedding", Knn.Cosine)
     val q8 = Quantize.quantizeTable(emb, "embedding", "qvec", m8)
     assert(ids(Quantize.searchRescore(q8, "embedding", "qvec", "vec_id",
-      m8, q, 10, Knn.Cosine)) === exact, "int8")
+      m8, q, 10)) === exact, "int8")
     // 4-bit
     val m4 = Quantize.train4(emb, "embedding", Knn.Cosine)
-    val q4 = Quantize.quantize4Table(emb, "embedding", "q4vec", m4)
-    assert(ids(Quantize.searchRescore4(q4, "embedding", "q4vec", "vec_id",
-      m4, q, 10, Knn.Cosine, refine = 24)) === exact, "4-bit")
+    val q4 = Quantize.quantizeTable(emb, "embedding", "q4vec", m4)
+    assert(ids(Quantize.searchRescore(q4, "embedding", "q4vec", "vec_id",
+      m4, q, 10, refine = 24)) === exact, "4-bit")
     // binary (plain Hamming screen over normalized-space sign bits)
     val mb = Quantize.trainBinary(emb, "embedding", Knn.Cosine)
-    val bdf = Quantize.binarizeTable(emb, "embedding", "bvec", mb)
-    assert(ids(Quantize.searchHammingRescore(bdf, "embedding", "bvec",
-      "vec_id", mb, q, 10, Knn.Cosine, refine = 24)) === exact, "binary")
+    val bdf = Quantize.quantizeTable(emb, "embedding", "bvec", mb)
+    assert(ids(Quantize.searchRescore(bdf, "embedding", "bvec",
+      "vec_id", mb, q, 10, refine = 24)) === exact, "binary")
     // binary residual-corrected: the L2² estimator lives in the
     // normalized space, where its order IS the cosine order
-    val rdf = Quantize.binarizeTableResidual(emb, "embedding", "bvec",
-      "rfac", mb)
-    assert(ids(Quantize.searchHammingRescoreResidual(rdf, "embedding",
-      "bvec", "rfac", "vec_id", mb, q, 10, refine = 16,
-      metric = Knn.Cosine)) === exact, "binary residual")
+    val rdf = Quantize.quantizeTable(emb, "embedding", "bvec",
+      Quantize.BResidual(mb, "rfac"))
+    assert(ids(Quantize.searchRescore(rdf, "embedding", "bvec", "vec_id",
+      Quantize.BResidual(mb, "rfac"), q, 10, refine = 16)) === exact,
+      "binary residual")
     // flat PQ
     val mpq = Quantize.trainPq(emb, "embedding", "vec_id",
       metric = Knn.Cosine)
-    val qpq = Quantize.quantizePqTable(emb, "embedding", "pqvec", mpq)
-    assert(ids(Quantize.searchRescorePq(qpq, "embedding", "pqvec",
-      "vec_id", mpq, q, 10, Knn.Cosine, refine = 24)) === exact, "pq")
+    val qpq = Quantize.quantizeTable(emb, "embedding", "pqvec", mpq)
+    assert(ids(Quantize.searchRescore(qpq, "embedding", "pqvec",
+      "vec_id", mpq, q, 10, refine = 24)) === exact, "pq")
   }
 
   test("cosine: screened batch joins equal the exact cosine knn join") {
@@ -389,15 +390,15 @@ class QuantizeSpec extends AnyFunSuite {
     }
     val m8 = Quantize.train(corpus, "embedding", Knn.Cosine)
     val q8 = Quantize.quantizeTable(corpus, "embedding", "qvec", m8)
-    run(Quantize.knnJoinQuant(q8, "embedding", "qvec", "vec_id", m8,
-      queriesDf, "query_id", "embedding", "corpus_id", 5, Knn.Cosine,
-      refine = 48), "int8 cosine")
+    run(Quantize.knnJoin(q8, "embedding", "qvec", "vec_id", m8,
+      queriesDf, "query_id", "embedding", "corpus_id", 5, refine = 48),
+      "int8 cosine")
     val mb = Quantize.trainBinary(corpus, "embedding", Knn.Cosine)
-    val rdf = Quantize.binarizeTableResidual(corpus, "embedding", "bvec",
-      "rfac", mb)
-    run(Quantize.knnJoinBinary(rdf, "embedding", "bvec", "vec_id", mb,
-      queriesDf, "query_id", "embedding", "corpus_id", 5, Knn.Cosine,
-      refine = 48, rCol = Some("rfac")), "binary residual cosine")
+    val rdf = Quantize.quantizeTable(corpus, "embedding", "bvec",
+      Quantize.BResidual(mb, "rfac"))
+    run(Quantize.knnJoin(rdf, "embedding", "bvec", "vec_id",
+      Quantize.BResidual(mb, "rfac"), queriesDf, "query_id", "embedding",
+      "corpus_id", 5, refine = 48), "binary residual cosine")
   }
 
   // ───── inner-product serving via the MIPS→L2 augmentation (r18) ─────
@@ -414,29 +415,29 @@ class QuantizeSpec extends AnyFunSuite {
     assert(m8.dim === 65 && m8.ipMaxNorm > 0.0f)
     val q8 = Quantize.quantizeTable(emb, "embedding", "qvec", m8)
     assert(ids(Quantize.searchRescore(q8, "embedding", "qvec", "vec_id",
-      m8, q, 10, Knn.IP, refine = 16)) === exact, "int8")
+      m8, q, 10, refine = 16)) === exact, "int8")
     // 4-bit
     val m4 = Quantize.train4(emb, "embedding", Knn.IP)
-    val q4 = Quantize.quantize4Table(emb, "embedding", "q4vec", m4)
-    assert(ids(Quantize.searchRescore4(q4, "embedding", "q4vec", "vec_id",
-      m4, q, 10, Knn.IP, refine = 24)) === exact, "4-bit")
+    val q4 = Quantize.quantizeTable(emb, "embedding", "q4vec", m4)
+    assert(ids(Quantize.searchRescore(q4, "embedding", "q4vec", "vec_id",
+      m4, q, 10, refine = 24)) === exact, "4-bit")
     // binary plain + residual-corrected (the L2² estimate in the
     // augmented space is monotone in the inner product per query)
     val mb = Quantize.trainBinary(emb, "embedding", Knn.IP)
-    val bdf = Quantize.binarizeTable(emb, "embedding", "bvec", mb)
-    assert(ids(Quantize.searchHammingRescore(bdf, "embedding", "bvec",
-      "vec_id", mb, q, 10, Knn.IP, refine = 32)) === exact, "binary")
-    val rdf = Quantize.binarizeTableResidual(emb, "embedding", "bvec",
-      "rfac", mb)
-    assert(ids(Quantize.searchHammingRescoreResidual(rdf, "embedding",
-      "bvec", "rfac", "vec_id", mb, q, 10, refine = 16,
-      metric = Knn.IP)) === exact, "binary residual")
+    val bdf = Quantize.quantizeTable(emb, "embedding", "bvec", mb)
+    assert(ids(Quantize.searchRescore(bdf, "embedding", "bvec",
+      "vec_id", mb, q, 10, refine = 32)) === exact, "binary")
+    val rdf = Quantize.quantizeTable(emb, "embedding", "bvec",
+      Quantize.BResidual(mb, "rfac"))
+    assert(ids(Quantize.searchRescore(rdf, "embedding", "bvec", "vec_id",
+      Quantize.BResidual(mb, "rfac"), q, 10, refine = 16)) === exact,
+      "binary residual")
     // flat PQ: the augmented dim (65) picks a compatible subspace count
     val mpq = Quantize.trainPq(emb, "embedding", "vec_id", m = 5,
       metric = Knn.IP)
-    val qpq = Quantize.quantizePqTable(emb, "embedding", "pqvec", mpq)
-    assert(ids(Quantize.searchRescorePq(qpq, "embedding", "pqvec",
-      "vec_id", mpq, q, 10, Knn.IP, refine = 24)) === exact, "pq")
+    val qpq = Quantize.quantizeTable(emb, "embedding", "pqvec", mpq)
+    assert(ids(Quantize.searchRescore(qpq, "embedding", "pqvec",
+      "vec_id", mpq, q, 10, refine = 24)) === exact, "pq")
   }
 
   test("inner-product: augmentation geometry — max-norm row binds to zero, order is exactly monotone") {
@@ -479,36 +480,85 @@ class QuantizeSpec extends AnyFunSuite {
       .as[(Long, Long, Int)].collect().toSet
     val m8 = Quantize.train(corpus, "embedding", Knn.IP)
     val q8 = Quantize.quantizeTable(corpus, "embedding", "qvec", m8)
-    val got = Quantize.knnJoinQuant(q8, "embedding", "qvec", "vec_id", m8,
-        queriesDf, "query_id", "embedding", "corpus_id", 5, Knn.IP,
-        refine = 48)
+    val got = Quantize.knnJoin(q8, "embedding", "qvec", "vec_id", m8,
+        queriesDf, "query_id", "embedding", "corpus_id", 5, refine = 48)
       .select("query_id", "corpus_id", "rn")
       .as[(Long, Long, Int)].collect().toSet
     assert(got === exact)
   }
 
-  test("cosine: metric mismatch between model and serving call is rejected") {
-    val mL2 = Quantize.train(emb, "embedding")
-    val qdf = Quantize.quantizeTable(emb, "embedding", "qvec", mL2)
-    val q = Array.fill(64)(0.1f)
-    // an L2-trained model cannot serve cosine (codes live in raw space)
-    assertThrows[IllegalArgumentException] {
-      Quantize.searchRescore(qdf, "embedding", "qvec", "vec_id", mL2, q,
-        5, Knn.Cosine)
+  test("a batch join requesting another metric than the codec's takes the exact fallback") {
+    val corpus = emb.filter($"vec_id" >= 10)
+    val queriesDf = emb.filter($"vec_id" < 10)
+      .select($"vec_id".as("query_id"), $"embedding")
+    def rows(d: DataFrame): Set[(Long, Long, Int)] =
+      d.select("query_id", "corpus_id", "rn")
+        .as[(Long, Long, Int)].collect().toSet
+    def exact(metric: Knn.Metric) = rows(Knn.knnJoin(queriesDf,
+      corpus.select($"vec_id".as("corpus_id"), $"embedding"),
+      "query_id", "embedding", "corpus_id", "embedding", k = 5, metric))
+    // the screened leg reads the code column; the exact fallback never does
+    def readsCodes(d: DataFrame): Boolean =
+      d.queryExecution.executedPlan.toString.linesIterator
+        .exists(l => l.contains("ReadSchema") && l.contains("qvec"))
+    val tmp = java.nio.file.Files.createTempDirectory("graft-codecmetric")
+    // (trained metric, requested metrics the registration must not serve)
+    Seq(Knn.L2 -> Seq(Knn.Cosine, Knn.IP), Knn.Cosine -> Seq(Knn.L2))
+      .foreach { case (trained, requested) =>
+        val path = tmp.resolve(trained.toString).toString
+        val c = Quantize.train(corpus, "embedding", trained)
+        Quantize.quantizeTable(corpus, "embedding", "qvec", c)
+          .write.parquet(path)
+        graft.plans.AnnRouting.registerQuant(SparkT.spark, path, path, c,
+          vecCol = "embedding", idCol = "vec_id", refine = 64)
+        def join(metric: Knn.Metric) = graft.plans.AnnRouting.knnJoin(
+          SparkT.spark, path, "embedding", "vec_id", queriesDf, "query_id",
+          "embedding", "corpus_id", 5, metric)
+        assert(readsCodes(join(trained)), s"$trained join did not route")
+        requested.foreach { metric =>
+          val got = join(metric)
+          assert(!readsCodes(got), s"$trained codec served a $metric join")
+          assert(rows(got) === exact(metric), s"$trained codec, $metric join")
+        }
+        graft.plans.AnnRouting.unregister(SparkT.spark, path)
+      }
+  }
+
+  test("searchRescore clamps an over-range k·refine instead of wrapping the screen LIMIT") {
+    val m = Quantize.train(emb, "embedding")
+    val qdf = Quantize.quantizeTable(emb, "embedding", "qvec", m)
+    val q = emb.where($"vec_id" === 0).select("embedding").as[Seq[Float]]
+      .head().toArray
+    val exact = Knn.knn(emb, "embedding", "vec_id", q, 10)
+      .select("vec_id").as[Long].collect().toSeq
+    // 10 · 2^28 wraps negative in Int; the clamped screen keeps every row
+    val got = Quantize.searchRescore(qdf, "embedding", "qvec", "vec_id", m,
+        q, 10, refine = 1 << 28)
+      .select("vec_id").as[Long].collect().toSeq
+    assert(got === exact)
+  }
+
+  test("BoundedTopK keeps the cap smallest (dist, id) pairs, growing only to the rows offered") {
+    val rnd = new scala.util.Random(5)
+    val pairs = Seq.fill(300)((rnd.nextInt(50).toDouble, rnd.nextLong()))
+    // 1 << 30 would be a 16 GB heap if allocated up front
+    Seq(1, 7, 64, 65, 200, 300, 1 << 30).foreach { cap =>
+      val h = new Quantize.BoundedTopK(cap)
+      pairs.foreach { case (d, id) => h.offer(d, id) }
+      assert(h.drain().toSeq === pairs.sorted.take(cap), s"cap $cap")
     }
-    // a cosine-trained model cannot serve L2 either
-    val mCos = Quantize.train(emb, "embedding", Knn.Cosine)
-    assertThrows[IllegalArgumentException] {
-      Quantize.searchRescore(qdf, "embedding", "qvec", "vec_id", mCos, q,
-        5, Knn.L2)
-    }
-    // IP over an L2 model is a mismatch too (IP serves through its own
-    // augmented-space model — train with metric = IP)
-    assertThrows[IllegalArgumentException] {
-      Quantize.knnJoinQuant(qdf, "embedding", "qvec", "vec_id", mL2,
+  }
+
+  test("knnJoin rejects an over-range k·refine naming k and refine") {
+    val m = Quantize.train(emb, "embedding")
+    val qdf = Quantize.quantizeTable(emb, "embedding", "qvec", m)
+    val e = intercept[IllegalArgumentException] {
+      Quantize.knnJoin(qdf, "embedding", "qvec", "vec_id", m,
         emb.select($"vec_id".as("qid"), $"embedding".as("qv")),
-        "qid", "qv", "vec_id", 5, Knn.IP)
+        "qid", "qv", "cid", 10, refine = 1 << 28)
     }
+    assert(e.getMessage.contains("k = 10") &&
+      e.getMessage.contains(s"refine = ${1 << 28}"), e.getMessage)
   }
 
   test("cosine: append with the frozen cosine model encodes in the normalized space (I9)") {
@@ -538,7 +588,7 @@ class QuantizeSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toSet
     val m8 = Quantize.train(corpus, "embedding")
     val q8 = Quantize.quantizeTable(corpus, "embedding", "qvec", m8)
-    val got = Quantize.knnJoinQuant(q8, "embedding", "qvec", "vec_id", m8,
+    val got = Quantize.knnJoin(q8, "embedding", "qvec", "vec_id", m8,
         queriesDf, "query_id", "embedding", "corpus_id", 5, refine = 2)
       .select("query_id", "corpus_id")
       .as[(Long, Long)].collect().toSet

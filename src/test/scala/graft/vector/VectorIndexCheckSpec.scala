@@ -181,13 +181,13 @@ class VectorIndexCheckSpec extends AnyFunSuite {
 
   test("4-bit family: healthy passes; nibble drift caught") {
     val m = Quantize.train4(emb, "embedding")
-    val path = writeTable(Quantize.quantize4Table(emb, "embedding", "q4vec", m))
-    val ok = VectorIndexCheck.checkQuant4(SparkT.spark, path, "embedding",
+    val path = writeTable(Quantize.quantizeTable(emb, "embedding", "q4vec", m))
+    val ok = VectorIndexCheck.checkQuant(SparkT.spark, path, "embedding",
       "q4vec", "vec_id", m)
     assert(ok.ok, ok.issues.mkString("; "))
     val t = SparkT.spark.read.parquet(path)
     val bad = writeTable(flipByte(t, "q4vec"))
-    val r = VectorIndexCheck.checkQuant4(SparkT.spark, bad, "embedding",
+    val r = VectorIndexCheck.checkQuant(SparkT.spark, bad, "embedding",
       "q4vec", "vec_id", m)
     assert(r.issues.exists(_.contains("disagree with the model re-encode")),
       r.issues)
@@ -195,8 +195,8 @@ class VectorIndexCheckSpec extends AnyFunSuite {
 
   test("binary family: healthy passes; flipped sign word caught") {
     val m = Quantize.trainBinary(emb, "embedding")
-    val path = writeTable(Quantize.binarizeTable(emb, "embedding", "bvec", m))
-    val ok = VectorIndexCheck.checkBinary(SparkT.spark, path, "embedding",
+    val path = writeTable(Quantize.quantizeTable(emb, "embedding", "bvec", m))
+    val ok = VectorIndexCheck.checkQuant(SparkT.spark, path, "embedding",
       "bvec", "vec_id", m, fact = Some((emb, "vec_id")))
     assert(ok.ok, ok.issues.mkString("; "))
     val t = SparkT.spark.read.parquet(path)
@@ -204,10 +204,38 @@ class VectorIndexCheckSpec extends AnyFunSuite {
       when(col("vec_id") === 3,
         array(element_at(col("bvec"), 1).bitwiseXOR(lit(1L))))
         .otherwise(col("bvec"))))
-    val r = VectorIndexCheck.checkBinary(SparkT.spark, bad, "embedding",
+    val r = VectorIndexCheck.checkQuant(SparkT.spark, bad, "embedding",
       "bvec", "vec_id", m)
     assert(r.issues.exists(_.contains("disagree with the model re-encode")),
       r.issues)
+  }
+
+  test("PQ and residual-binary families: healthy passes; a flipped PQ code and a corrupted bres factor are caught") {
+    val mpq = Quantize.trainPq(emb, "embedding", "vec_id")
+    val pq = writeTable(Quantize.quantizeTable(emb, "embedding", "pqvec", mpq))
+    val okPq = VectorIndexCheck.checkQuant(SparkT.spark, pq, "embedding",
+      "pqvec", "vec_id", mpq, fact = Some((emb, "vec_id")))
+    assert(okPq.ok, okPq.issues.mkString("; "))
+    // PQ codes are BINARY too: flip vec_id 3's first subspace code
+    val badPq = writeTable(flipByte(SparkT.spark.read.parquet(pq), "pqvec"))
+    val rPq = VectorIndexCheck.checkQuant(SparkT.spark, badPq, "embedding",
+      "pqvec", "vec_id", mpq)
+    assert(rPq.issues.exists(_.contains("disagree with the model re-encode")),
+      rPq.issues)
+    val res = Quantize.BResidual(Quantize.trainBinary(emb, "embedding"))
+    val br = writeTable(Quantize.quantizeTable(emb, "embedding", "bvec", res))
+    val okBr = VectorIndexCheck.checkQuant(SparkT.spark, br, "embedding",
+      "bvec", "vec_id", res, fact = Some((emb, "vec_id")))
+    assert(okBr.ok, okBr.issues.mkString("; "))
+    // the sign bits stay intact; only vec_id 3's stored residual norm drifts
+    val badBr = writeTable(SparkT.spark.read.parquet(br).withColumn("bres",
+      when(col("vec_id") === 3, struct(
+        (col("bres.norm") * 1.5f).cast("float").as("norm"),
+        col("bres.scale").as("scale"))).otherwise(col("bres"))))
+    val rBr = VectorIndexCheck.checkQuant(SparkT.spark, badBr, "embedding",
+      "bvec", "vec_id", res)
+    assert(rBr.issues.exists(_.contains("disagree with the model re-encode")),
+      rBr.issues)
   }
 
   test("IVF family: healthy passes; assignment drift, oob cluster, dup id, fact drift caught") {
@@ -324,14 +352,14 @@ class VectorIndexCheckSpec extends AnyFunSuite {
       .exists(_.contains("disagree with the model re-encode")))
 
     val m4 = Quantize.train4(emb, "embedding", Knn.IP)
-    val p4 = writeTable(Quantize.quantize4Table(emb, "embedding", "q4vec", m4))
-    val ok4 = VectorIndexCheck.checkQuant4(SparkT.spark, p4, "embedding",
+    val p4 = writeTable(Quantize.quantizeTable(emb, "embedding", "q4vec", m4))
+    val ok4 = VectorIndexCheck.checkQuant(SparkT.spark, p4, "embedding",
       "q4vec", "vec_id", m4)
     assert(ok4.ok, ok4.issues.mkString("; "))
 
     val mb = Quantize.trainBinary(emb, "embedding", Knn.IP)
-    val pb = writeTable(Quantize.binarizeTable(emb, "embedding", "bvec", mb))
-    val okB = VectorIndexCheck.checkBinary(SparkT.spark, pb, "embedding",
+    val pb = writeTable(Quantize.quantizeTable(emb, "embedding", "bvec", mb))
+    val okB = VectorIndexCheck.checkQuant(SparkT.spark, pb, "embedding",
       "bvec", "vec_id", mb)
     assert(okB.ok, okB.issues.mkString("; "))
   }
